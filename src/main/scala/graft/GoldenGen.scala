@@ -113,7 +113,7 @@ object GoldenGen {
 
   /** The t13 auto-sized LSH plan for a planted corpus of `n` vectors —
     * the SINGLE derivation shared by the query (via
-    * [[graft.operators.Similarity.nearDupPairsAuto]], which recomputes
+    * [[graft.operators.Similarity.nearDupPairsBudgeted]], which recomputes
     * it from its own count action) and the artifact generator, so the
     * committed bucket table and the live query always agree on width.
     * Deterministic: a pure function of the corpus row count. */
@@ -241,7 +241,7 @@ object GoldenGen {
           "text", "doc_id")
       case "t13_buckets" =>
         // sized per SF by the SAME lshPlan the production entry point
-        // (nearDupPairsAuto) applies — the artifact is the record of the
+        // (nearDupPairsBudgeted) applies — the artifact is the record of the
         // auto plan at this corpus size, not a hand-picked constant
         val planted = graft.queries.LlmQueries.plantedEmbeddings(spark, sfDir)
         val (bits, tables) = nearDupPlan(planted.count())

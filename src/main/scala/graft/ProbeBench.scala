@@ -15,12 +15,6 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_GRAFT_REPEAT     timed repeats per query (default 1; the
   *                          min wall is reported as `best`)
   *   SPARK_GRAFT_NO_WARM    skip the untimed shared-corpus warm
-  *   SPARK_GRAFT_SINK       `toRdd` (default, the honest full-
-  *                          evaluation sink) or `count` (the pre-r13
-  *                          column-pruning sink) — the `count` mode
-  *                          exists ONLY to attribute r≤12 → r≥13
-  *                          bench deltas to the sink change vs a real
-  *                          plan change; never use it for records
   *   SPARK_GRAFT_EXTRA_CONF semicolon-separated `key=value` Spark
   *                          confs applied on top of the engine
   *                          defaults (knob A/B runs)
@@ -44,7 +38,6 @@ object ProbeBench {
     require(args.nonEmpty, "usage: ProbeBench <queryName> [<queryName> ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
-    val sink = sys.env.getOrElse("SPARK_GRAFT_SINK", "toRdd")
     val unknown = args.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
@@ -73,7 +66,7 @@ object ProbeBench {
         val t0 = System.nanoTime()
         val err = try {
           val df = fn(spark, sfDir)
-          if (sink == "count") df.count() else df.queryExecution.toRdd.count()
+          df.queryExecution.toRdd.count()
           None
         } catch { case e: Throwable => Some(e.getClass.getSimpleName) }
         val wall = (System.nanoTime() - t0) / 1e9
@@ -93,7 +86,7 @@ object ProbeBench {
     }.mkString("{", ",", "}")
     val cpus = results.map { case (k, _, _, c, _) => s""""$k":${f(c)}""" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"probe","sf":"$sfDir","repeat":$repeat,"sink":"$sink","initial_partitions":"${graft.core.Sessions.initialPartitions}","loadavg_start":$load0,"loadavg_end":$loadAvg,"cpu_s":$cpus,"queries":$qs}""")
+    println(s"""{"metric":"probe","sf":"$sfDir","repeat":$repeat,"initial_partitions":"${graft.core.Sessions.initialPartitions}","loadavg_start":$load0,"loadavg_end":$loadAvg,"cpu_s":$cpus,"queries":$qs}""")
     spark.stop()
   }
 }

@@ -12,53 +12,35 @@ import org.apache.spark.sql.functions._
   * authoritative; this exists so further decades (sf0.1 → 10× → 100×
   * → 1000×) can be measured on demand without touching /root/testdata.
   *
-  * Two modes (4th CLI arg, default `heaps`):
+  * Documents draw tokens from an UNBOUNDED head-smoothed Zipf rank
+  * distribution whose low ranks map onto the base corpus vocabulary
+  * (frequency-ranked) and whose deep ranks mint novel synthetic tokens
+  * — so the type space grows ∝ √N with the corpus (Heaps' law,
+  * β = 0.5; the repo measures exactly this curve on corpora as t89).
+  * This is what real web text does and what a fixed-vocabulary
+  * resample does NOT: round 14 measured such a resample saturating the
+  * ~27 k-type 3-gram shingle space at 100×, where every shingle's df
+  * blows past the rare-shingle band [2, 20] and the t09/t26 decade
+  * rows measure only the blocking aggregate (zero candidates —
+  * PLANS.md round-14 "honest limit" note). Here rare shingles stay
+  * rare at EVERY factor, so near-dup blocking density is
+  * scale-invariant and the verify arm does real work at 100×/1000×.
   *
-  *   - `heaps` (round 15, the default): documents draw tokens from an
-  *     UNBOUNDED head-smoothed Zipf rank distribution whose low ranks
-  *     map onto the base corpus vocabulary (frequency-ranked) and
-  *     whose deep ranks mint novel synthetic tokens — so the type
-  *     space grows ∝ √N with the corpus (Heaps' law, β = 0.5; the
-  *     repo measures exactly this curve on corpora as t89). This is
-  *     what real web text does and what the fixed resample does NOT:
-  *     round 14 measured the fixed mode saturating the ~27 k-type
-  *     3-gram shingle space at 100×, where every shingle's df blows
-  *     past the rare-shingle band [2, 20] and the t09/t26 decade rows
-  *     measure only the blocking aggregate (zero candidates — PLANS.md
-  *     round-14 "honest limit" note). Under heaps mode rare shingles
-  *     stay rare at EVERY factor, so near-dup blocking density is
-  *     scale-invariant and the verify arm does real work at 100×/1000×.
-  *     Embeddings in this mode use the scattered variant: rotation
-  *     composed with a per-copy (not per-rotation-group) sign flip,
-  *     killing the rotation-autocorrelation families that made cross-
-  *     copy cosines of smooth base vectors spuriously high (the t13
-  *     candidate "densification" measured in round 14 — bucket
-  *     occupancy 39 → 49 avg, 166 → 446 max across one decade).
-  *
-  *   - `fixed` (rounds 12-14, kept for record comparability): the
-  *     historical generator documented below.
-  *
-  * Copy discipline (both modes; copy 0 is the original rows, ids
-  * preserved):
-  *   - documents: copy k re-SAMPLES each document's tokens from the
-  *     corpus vocabulary with xxhash64(k, doc_id, position) — same
-  *     vocabulary, same per-doc length, fresh iid draws — so the
-  *     scaled corpus has the generator's own density character
-  *     instead of planted 10-cliques (verbatim copies would hand the
-  *     near-dup detectors a quadratic answer that says nothing about
-  *     scaling). lang/source ride along; n_chars recomputed.
+  * Copy discipline (copy 0 is the original rows, ids preserved):
+  *   - documents: copy k re-draws each document's tokens with
+  *     [[zipfRank]] keyed by (k, doc_id, position) — same per-doc
+  *     length, fresh draws — so the scaled corpus has no planted
+  *     10-cliques (verbatim copies would hand the near-dup detectors a
+  *     quadratic answer that says nothing about scaling). lang/source
+  *     ride along; n_chars recomputed.
   *   - embeddings: copy k cyclically shifts the vector by k positions,
-  *     composed with a per-component sign flip keyed by the rotation
-  *     GROUP g = k div dims (g = 0 flips nothing, so factors ≤ dims
-  *     reproduce the historical pure-rotation corpus bit for bit).
-  *     Both steps are isometries, so norms, label cluster structure,
-  *     and the IVF regime survive while cross-copy cosines scatter
-  *     like unrelated vectors. The flip is what makes factors past
-  *     dims honest: rotation alone has period dims, so copy k and
-  *     copy k+dims would be IDENTICAL vectors — an artificial
-  *     exact-duplicate family that hands the embedding near-dup
-  *     detectors a fake quadratic answer (this bug shaped the first
-  *     100× embedding measurements; PLANS.md records the remeasure).
+  *     composed with a per-copy sign flip keyed xxhash64(k, i). Both
+  *     steps are isometries, so norms, label cluster structure, and the
+  *     IVF regime survive while cross-copy cosines scatter like
+  *     unrelated vectors (rotation alone would keep smooth base
+  *     vectors' copies highly self-similar, and has period dims — copy
+  *     k and copy k+dims would be IDENTICAL, a fake exact-duplicate
+  *     family; PLANS.md records both remeasures).
   *   - events: copy k shifts event_id by k·10⁹ and user_id by k·10⁵ —
   *     factor× users over the same time range, so per-user session
   *     shapes hold while windows carry factor× rows (the honest
@@ -67,20 +49,19 @@ import org.apache.spark.sql.functions._
   * All three are ONE plan regardless of factor: the copy index is an
   * exploded `sequence(0, factor-1)` column, not a factor-way union —
   * a 1000-way union is itself a scale defect (plan size and analysis
-  * time linear in factor, codegen fallback), and the explode form is
-  * value-identical (ScaleGenSpec pins parity against a literal
-  * union-form reference).
+  * time linear in factor, codegen fallback); ScaleGenSpec pins the
+  * events generator against a literal union-form reference.
   *
   * The TPC-H-ish tables are byte-copied verbatim (the decade probe
   * targets the pipeline tables; relational queries then run unchanged
   * inputs and serve as the fixed-cost control group).
   *
-  * Usage: runMain graft.ScaleGen <srcSfDir> <outDir> [factor] [mode]
+  * Usage: runMain graft.ScaleGen <srcSfDir> <outDir> [factor]
   */
 object ScaleGen {
 
-  /** Head-smoothed Zipf rank draw over an unbounded domain, the heaps
-    * mode's core: u = (h+1)/M uniform on (0,1], rank
+  /** Head-smoothed Zipf rank draw over an unbounded domain, the
+    * documents generator's core: u = (h+1)/M uniform on (0,1], rank
     * R = ⌊H·M/(h+1)⌋ − H + 1 ∈ [1, ∞). Exactly
     * P(R = r) = H/((H+r−1)(H+r)) — tail ∝ r⁻², so distinct types seen
     * in N draws grow ∝ √(H·N) (Heaps β = 0.5), while the head constant
@@ -97,37 +78,13 @@ object ScaleGen {
 
   /** Exploded copy index 0..factor-1 as an IntegerType column named
     * `__k` (IntegerType is load-bearing: xxhash64 hashes Int and Long
-    * differently, and the historical union form seeded with an Int
-    * literal). */
+    * differently, and the recorded scaled corpora hashed an Int). */
   private def withCopyIndex(src: DataFrame, factor: Int): DataFrame = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
     src.withColumn("__k", explode(sequence(lit(0), lit(factor - 1))))
   }
 
-  def scaleDocuments(spark: SparkSession, src: DataFrame, factor: Int): DataFrame = {
-    val vocab = graft.core.Bounded.collect(
-      src.select(explode(split(trim(col("text")), "\\s+")).as("w"))
-        .where(length(col("w")) > 0).distinct(), 1 << 16, "ScaleGen.vocab")
-      .map(_.getString(0)).sorted
-    val vLit = typedLit(vocab)
-    val n = lit(vocab.length)
-    val k = col("__k")
-    val nTok = size(split(trim(col("text")), "\\s+"))
-    val fresh = array_join(
-      transform(sequence(lit(1), nTok), j =>
-        element_at(vLit,
-          (pmod(xxhash64(k, col("doc_id"), j), n) + 1).cast("int"))),
-      " ")
-    withCopyIndex(src, factor).select(
-      (col("doc_id") + k.cast("long") * lit(10000000L)).as("doc_id"),
-      when(k === 0, col("text")).otherwise(fresh).as("text"),
-      col("lang"), col("source"),
-      when(k === 0, col("n_chars"))
-        .otherwise(length(fresh).cast("long")).as("n_chars"))
-  }
-
-  /** Heaps-mode documents: same copy/id/length discipline as
-    * [[scaleDocuments]], but tokens come from the [[zipfRank]] draw —
+  /** Scaled documents: tokens come from the [[zipfRank]] draw —
     * rank r ≤ V₀ is the base corpus's r-th most frequent word (so the
     * common-word head keeps the corpus's own character), rank r > V₀
     * mints the synthetic type `x<base36(r−V₀)>`. Novel types therefore
@@ -165,32 +122,13 @@ object ScaleGen {
         .otherwise(length(fresh).cast("long")).as("n_chars"))
   }
 
-  def scaleEmbeddings(src: DataFrame, factor: Int): DataFrame = {
-    val k = col("__k")
-    val dims = size(col("embedding"))
-    // rotation group: which full wrap of the cyclic shift k is in
-    val g = floor(k.cast("double") / dims.cast("double")).cast("int")
-    val rotated = transform(sequence(lit(0), dims - 1), i => {
-      val e = element_at(col("embedding"), (pmod(i + k, dims) + 1).cast("int"))
-      // sign flip keyed by (group, output position); group 0 = identity
-      // so every historical factor ≤ dims corpus is reproduced verbatim
-      val sign = (pmod(xxhash64(g, i), lit(2)).cast("int") * lit(2) - lit(1)).cast("float")
-      when(g === 0, e).otherwise(e * sign).cast("float")
-    })
-    withCopyIndex(src, factor).select(
-      (col("vec_id") + k.cast("long") * lit(10000000L)).as("vec_id"),
-      when(k === 0, col("embedding")).otherwise(rotated).as("embedding"),
-      col("label"))
-  }
-
-  /** Heaps-mode embeddings: rotation composed with a PER-COPY sign
-    * flip keyed xxhash64(k, i) for every copy k ≥ 1 (the legacy
-    * [[scaleEmbeddings]] flips only per rotation GROUP, so its first
-    * dims copies are pure rotations — and cos(rot_j(v), rot_l(v)) is
-    * v's autocorrelation at lag l−j, which for smooth base vectors is
-    * HIGH: each base vector's copies formed a partially-similar family
-    * and the t13 bucket occupancy densified across decades, the r14
-    * candidate-amplification artifact). Independent ±1 flip sequences
+  /** Scaled embeddings: rotation composed with a PER-COPY sign flip
+    * keyed xxhash64(k, i) for every copy k ≥ 1. Pure rotations are not
+    * enough: cos(rot_j(v), rot_l(v)) is v's autocorrelation at lag
+    * l−j, which for smooth base vectors is HIGH — each base vector's
+    * copies formed a partially-similar family and the t13 bucket
+    * occupancy densified across decades, the r14
+    * candidate-amplification artifact. Independent ±1 flip sequences
     * turn every cross-copy inner product into a signed random walk,
     * cos ~ N(0, 1/d) — unrelated-vector statistics — while each step
     * stays an isometry: norms, within-copy cluster structure, and the
@@ -219,12 +157,11 @@ object ScaleGen {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ScaleGen <srcSfDir> <outDir> [factor] [mode: heaps|fixed]")
+    require(args.length == 2 || args.length == 3,
+      "usage: ScaleGen <srcSfDir> <outDir> [factor]")
     val (srcDir, outDir) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1 && factor <= 10000)
-    val mode = if (args.length > 3) args(3) else "heaps"
-    require(mode == "heaps" || mode == "fixed", s"unknown mode $mode")
     val spark = graft.core.Sessions.local("graft-scalegen")
     Files.createDirectories(Paths.get(outDir))
 
@@ -233,11 +170,9 @@ object ScaleGen {
     val parts = math.max(32, 32 * factor / 100)
     val srcDocs = graft.core.Tables.documents(spark, srcDir)
     val srcEmbs = graft.core.Tables.embeddings(spark, srcDir)
-    (if (mode == "heaps") scaleDocumentsHeaps(spark, srcDocs, factor)
-     else scaleDocuments(spark, srcDocs, factor))
+    scaleDocumentsHeaps(spark, srcDocs, factor)
       .repartition(parts).write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-    (if (mode == "heaps") scaleEmbeddingsScattered(srcEmbs, factor)
-     else scaleEmbeddings(srcEmbs, factor))
+    scaleEmbeddingsScattered(srcEmbs, factor)
       .repartition(parts).write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
     scaleEvents(graft.core.Tables.events(spark, srcDir), factor)
       .repartition(parts).write.mode("overwrite").parquet(s"$outDir/events.parquet")
@@ -248,7 +183,7 @@ object ScaleGen {
         Files.copy(Paths.get(s"$srcDir/$t.parquet"),
           Paths.get(s"$outDir/$t.parquet"), StandardCopyOption.REPLACE_EXISTING)
       }
-    println(s"[scalegen] wrote ${factor}x ($mode mode) of $srcDir to $outDir")
+    println(s"[scalegen] wrote ${factor}x of $srcDir to $outDir")
     spark.stop()
   }
 }

@@ -57,18 +57,34 @@ object ClassifierKernel {
 
   /** Σ w(b) over a bucket array with 1e6-scaled integer weights — the
     * scoring dot product (`aggregate(bs, 0L, acc + element_at(w, b+1))`).
-    * Null element → null (element_at's null propagation). */
+    * Null element → null (element_at's null propagation). A bucket id
+    * outside `w` fails loudly ([[outOfRange]]). */
   def dotLong(bs: ArrayData, w: Array[Long]): java.lang.Long = {
     val n = bs.numElements()
     var acc = 0L
     var i = 0
-    while (i < n) {
-      if (bs.isNullAt(i)) return null
-      acc += w(bs.getInt(i))
-      i += 1
+    try {
+      while (i < n) {
+        if (bs.isNullAt(i)) return null
+        acc += w(bs.getInt(i))
+        i += 1
+      }
+    } catch {
+      case _: ArrayIndexOutOfBoundsException =>
+        throw outOfRange("graft_lr_dot", bs.getInt(i), w.length)
     }
     acc
   }
+
+  /** The SQL-misuse error for a bucket id that indexes past the weights
+    * literal (buckets hashed with a larger dims than the weights were
+    * trained for). Raised from a catch around the kernels' loops, so
+    * the per-element path carries no range check. */
+  def outOfRange(fn: String, bucket: Int, weights: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"$fn: bucket id $bucket is outside the $weights-element weights " +
+        s"literal (${weights - 1} dims + bias); the bucket array was " +
+        "built with a different dims than the weights")
 }
 
 /** `graft_md5_buckets(tokens, dims)` → array<int> of md5 feature
@@ -177,7 +193,15 @@ case class LrDotLong(left: Expression, right: Expression)
   *     re-pinned against the committed artifacts at every SF);
   *   - a null-y document contributes only to the count cell (the
   *     composed form's sum() null-skip), a null bucket array
-  *     contributes nothing (concat(NULL, …) → explode drops the row).
+  *     contributes nothing (concat(NULL, …) → explode drops the row);
+  *   - a null bucket element scatters nothing (its null group key is
+  *     no cell) and nulls the margin fold, which the composed form's
+  *     coalesce turns into a bias-only margin; a null n divides the
+  *     margin as 1.0 and scatters nothing to the token cells (e/NULL
+  *     is null), while the bias and count cells still accumulate;
+  *   - a bucket id past the weights literal fails with a named error
+  *     ([[ClassifierKernel.outOfRange]]) instead of a bare index
+  *     exception.
   *
   * Why: the composed form materializes one exploded row PER TOKEN per
   * iteration and runs two CodegenFallback higher-order lambdas per
@@ -227,17 +251,32 @@ case class LogisticGradAgg(
     val nv = nTok.eval(input)
     val n = if (nv == null) Double.NaN else nv.asInstanceOf[Double]
     val m = arr.numElements()
-    // margin fold in array order — bit-identical to aggregate(bs, 0.0, +)
-    var s = 0.0
     var i = 0
-    while (i < m) { s += weights(arr.getInt(i)); i += 1 }
-    val effN = if (!(n > 0.0)) 1.0 else n
-    val margin = s / effN + weights(dims)
-    val e = 1.0 / (1.0 + math.exp(-margin)) - yv.asInstanceOf[Double]
-    val g = e / n // the scatter uses RAW n (explode's e/n); m > 0 ⇒ n > 0
-    i = 0
-    while (i < m) { buf(arr.getInt(i)) += g; i += 1 }
-    buf(dims) += e
+    try {
+      // margin fold in array order — bit-identical to aggregate(bs, 0.0, +)
+      var s = 0.0
+      var nullElem = false
+      while (i < m) {
+        if (arr.isNullAt(i)) nullElem = true else s += weights(arr.getInt(i))
+        i += 1
+      }
+      val effN = if (!(n > 0.0)) 1.0 else n
+      val margin = (if (nullElem) 0.0 else s / effN) + weights(dims)
+      val e = 1.0 / (1.0 + math.exp(-margin)) - yv.asInstanceOf[Double]
+      if (nv != null) {
+        val g = e / n // the scatter uses RAW n (explode's e/n); m > 0 ⇒ n > 0
+        i = 0
+        while (i < m) {
+          if (!arr.isNullAt(i)) buf(arr.getInt(i)) += g
+          i += 1
+        }
+      }
+      buf(dims) += e
+    } catch {
+      case _: ArrayIndexOutOfBoundsException =>
+        throw ClassifierKernel.outOfRange("graft_logit_grad", arr.getInt(i),
+          weights.length)
+    }
     buf
   }
 

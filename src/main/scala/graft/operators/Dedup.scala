@@ -277,7 +277,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .select(col("left_id"), col("right_id"), col("hamming"))
 
-  /** Append the exactness marker the Budgeted/Auto entry points return
+  /** Append the exactness marker the Budgeted entry points return
     * (r18 verdict item 2): a boolean `capped` column — per-row, so it
     * survives writes and unions — whose column METADATA carries the
     * same flag under key "graft.capped", readable even when the result
@@ -290,69 +290,44 @@ object Dedup {
     df.withColumn("capped", lit(capped).as("capped", meta))
   }
 
-  /** [[simHashPairs]] at [[simHashPlan]]-sized blocking — the
-    * production path (the [[Similarity]] `nearDupPairsAuto` pattern):
-    * one count() sizes the keys to the corpus; below `capAbove` docs
-    * the plan is capless, so the answer is the exact Hamming ball and
-    * the oracle holds at every verify scale.
+  /** [[simHashPairs]] at [[simHashPlan]]-sized blocking with the
+    * occupancy cap sized to THIS corpus — the production path (the
+    * [[Similarity]] `nearDupPairsBudgeted` pattern): one count() sizes
+    * the keys to the corpus; below `capAbove` docs the plan is capless,
+    * so the answer is the exact Hamming ball and the oracle holds at
+    * every verify scale.
     *
-    * Since round 19 this IS [[simHashPairsBudgeted]]: above `capAbove`
-    * the occupancy cap is sized from THIS corpus's bucket histogram to
-    * the `streamPerDoc` ordered-stream budget, because the fixed
-    * `targetBucketSize` cap the Auto path used before measurably loses
-    * recall per decade as correlated corpora densify (PROBE_t08_r18:
-    * planted recall 90.7% at 1 M docs → 85.7% at 10 M under cap 64,
-    * while the admitted stream per doc balloons). The budget is the
-    * only contract the fourth-decade measurements showed stable across
-    * decades, so the obvious entry point now inherits it instead of
-    * hiding it behind a log line. Output carries a boolean `capped`
-    * marker column — false on every exact run — so a downstream
-    * consumer can gate on exactness programmatically (r18 verdict
-    * item 2); golden projections drop it. */
-  def simHashPairsAuto(df: DataFrame, textCol: String, idCol: String,
-                       maxHamming: Int, chunkSize: Int = 2048,
-                       streamPerDoc: Double = 8192.0,
-                       capAbove: Long = 262144L,
-                       knownN: Option[Long] = None): DataFrame =
-    simHashPairsBudgeted(df, textCol, idCol, maxHamming, streamPerDoc,
-      chunkSize, capAbove, knownN)
-
-  /** [[simHashPairsAuto]] with the cap sized to THIS corpus instead of
-    * the fixed targetBucketSize — the full two-pass discipline
+    * Above `capAbove` it runs the full two-pass discipline
     * [[capFromHistogram]] documents, as one call: pass 1 aggregates the
     * occupancy histogram under the corpus-sized blocking (one groupBy
     * over corpus × tables thin rows, collected as ≤ 64 tiny size-class
-    * rows), pass 2 runs the capped pair enumeration. Exists because the
-    * r18 fourth-decade measurement showed fixed caps silently losing
-    * recall per decade (90.7% → 85.7% planted at cap 64 from 1 M to
-    * 10 M docs) while the admitted stream per doc balloons — the only
-    * stable contract across decades is a per-doc stream BUDGET, which
-    * this entry point enforces. Below `capAbove` docs it is exactly
-    * [[simHashPairsAuto]]'s capless exact path.
+    * rows), pass 2 runs the capped pair enumeration at the largest cap
+    * whose ordered stream stays within `streamPerDoc` rows per doc.
+    * Exists because the r18 fourth-decade measurement showed fixed
+    * `targetBucketSize` caps silently losing recall per decade
+    * (PROBE_t08_r18: planted recall 90.7% at 1 M docs → 85.7% at 10 M
+    * under cap 64) while the admitted stream per doc balloons — the
+    * only stable contract across decades is a per-doc stream BUDGET,
+    * which this entry point enforces.
     *
     * Output schema: (left_id, right_id, hamming, capped) — `capped` is
     * true iff an occupancy cap actually engaged (subset semantics),
     * false on every exact run, including above-threshold corpora whose
-    * whole histogram fits the budget.
+    * whole histogram fits the budget — so a downstream consumer can
+    * gate on exactness programmatically; golden projections drop it.
     *
     * Lineage discipline (r18 verdict item 4): the sizing needs the doc
-    * count and the occupancy histogram before the pair enumeration —
-    * over a DERIVED input (a curation-stage output, not a raw scan)
-    * each extra pass re-executes the upstream pipeline. Pass `knownN`
-    * when the caller already knows the count (or persisted the input
-    * and counted it), which drops the count pass entirely; the
-    * histogram pass is irreducible (it IS the sizing data) but runs at
-    * most once, and only above `capAbove`. Measured
-    * (PROBE_budgetpass_r19): 4 upstream evaluations default → 3 with
-    * `knownN` (histogram + the self-join's two arms), answer
-    * invariant — callers with expensive derived inputs should persist
-    * them. */
+    * count and, above `capAbove`, the occupancy histogram before the
+    * pair enumeration — over a DERIVED input (a curation-stage output,
+    * not a raw scan) each extra pass re-executes the upstream pipeline,
+    * so callers with expensive derived inputs should persist them
+    * (PROBE_budgetpass_r19 measured 4 upstream evaluations: the count,
+    * the histogram and the self-join's two arms). */
   def simHashPairsBudgeted(df: DataFrame, textCol: String, idCol: String,
                            maxHamming: Int, streamPerDoc: Double = 8192.0,
                            chunkSize: Int = 2048,
-                           capAbove: Long = 262144L,
-                           knownN: Option[Long] = None): DataFrame = {
-    val n = knownN.getOrElse(df.count())
+                           capAbove: Long = 262144L): DataFrame = {
+    val n = df.count()
     val (blocks, keyBlocks, planCap) = simHashPlan(n, maxHamming,
       capAbove = capAbove)
     if (planCap.isEmpty)

@@ -200,67 +200,40 @@ object Similarity {
     (bits, math.min(maxTables, math.max(1, tables)))
   }
 
-  /** [[nearDupPairs]] at [[lshPlan]]-sized width — the production
+  /** [[nearDupPairs]] at [[lshPlan]]-sized width with the occupancy
+    * cap sized to THIS corpus's bucket histogram — the production
     * default for corpora of unknown size (one count action sizes the
     * plan; the fixed-bits variant stays for oracle determinism, exactly
-    * the autoK/pruneAuto convention).
+    * the autoK/pruneAuto convention). Below `capAbove` vectors this is
+    * the capless exact-verify path at lshPlan width (every oracle
+    * scale).
     *
-    * Since round 19 this IS [[nearDupPairsBudgeted]]: above `capAbove`
-    * the occupancy cap is sized from THIS corpus's bucket histogram to
-    * the `streamPerVec` candidate-stream budget instead of the fixed
-    * `capFactor × targetBucketSize` the Auto path used before. The
-    * simhash twin's fourth-decade measurement (PROBE_t08_r18) proved
-    * fixed caps silently lose recall per decade as corpora densify
-    * while the admitted stream balloons — the per-vector budget is the
-    * only contract stable across decades, so the obvious entry point
-    * inherits it (r18 verdict item 1). Sub-threshold corpora (every
-    * oracle scale) stay capless and exact. Output carries a boolean
-    * `capped` marker column — false on every exact-candidate run — so
-    * downstream consumers can gate on exactness; golden projections
-    * drop it. */
-  def nearDupPairsAuto(df: DataFrame, idCol: String, vecCol: String,
-                       dims: Int, threshold: Double,
-                       targetRecall: Double = 0.9,
-                       targetBucketSize: Long = 64,
-                       chunkSize: Int = 2048,
-                       capAbove: Long = 262144,
-                       streamPerVec: Double = 1024.0,
-                       knownN: Option[Long] = None): DataFrame =
-    nearDupPairsBudgeted(df, idCol, vecCol, dims, threshold, targetRecall,
-      targetBucketSize, streamPerVec, chunkSize, capAbove, knownN)
-
-  /** [[nearDupPairsAuto]] with the occupancy cap sized to THIS corpus's
-    * bucket histogram instead of the fixed capFactor — the
+    * Above `capAbove` it runs the
     * [[graft.operators.Dedup.simHashPairsBudgeted]] two-pass discipline
     * on the LSH tables: pass 1 aggregates bucket occupancy under the
     * lshPlan width (one groupBy over corpus × tables thin rows,
     * collected as ≤ 64 size-class rows), pass 2 runs the capped
     * enumeration at the largest cap whose admitted candidate stream
     * stays within `streamPerVec × n` ordered rows. Exists for the same
-    * measured reason as the simhash variant: fixed caps lose recall as
-    * corpora densify, and fixed capFactors admit ballooning streams —
-    * the stable cross-decade contract is the budget. Below `capAbove`
-    * vectors this is the capless exact-verify path at lshPlan width.
+    * measured reason as the simhash variant (PROBE_t08_r18): fixed
+    * caps lose recall as corpora densify, and fixed capFactors admit
+    * ballooning streams — the stable cross-decade contract is the
+    * budget.
     *
     * Output schema: (left_id, right_id, cosine_sim, capped) — `capped`
     * is true iff an occupancy cap actually engaged (candidate-subset
-    * semantics), false on every exact-candidate run. Pass `knownN`
-    * when the caller already knows the corpus count (or persisted the
-    * input and counted it) — over a derived input each extra pass
-    * re-executes the upstream pipeline, and the count pass is the one
-    * the caller can supply (the histogram pass IS the sizing data;
-    * measured for the simhash twin in PROBE_budgetpass_r19: 4 → 3
-    * upstream evaluations, answer invariant — persist expensive
-    * derived inputs). */
+    * semantics), false on every exact-candidate run, so downstream
+    * consumers can gate on exactness; golden projections drop it.
+    * Over a derived input each sizing pass re-executes the upstream
+    * pipeline — persist expensive derived inputs. */
   def nearDupPairsBudgeted(df: DataFrame, idCol: String, vecCol: String,
                            dims: Int, threshold: Double,
                            targetRecall: Double = 0.9,
                            targetBucketSize: Long = 64,
                            streamPerVec: Double = 1024.0,
                            chunkSize: Int = 2048,
-                           capAbove: Long = 262144,
-                           knownN: Option[Long] = None): DataFrame = {
-    val n = knownN.getOrElse(df.count())
+                           capAbove: Long = 262144): DataFrame = {
+    val n = df.count()
     val (bits, tables) = lshPlan(n, threshold, targetRecall,
       targetBucketSize)
     if (n <= capAbove)
@@ -289,7 +262,7 @@ object Similarity {
     * (tbl, bucket, id) rows ONLY — vectors are re-joined by id for the
     * cosine verify over the distinct candidate-pair set, mirroring the
     * Dedup scale contract. Fixed `bits` is the oracle-deterministic
-    * surface; at unknown corpus scale use [[nearDupPairsAuto]] — the
+    * surface; at unknown corpus scale use [[nearDupPairsBudgeted]] — the
     * 100× probe measured THIS shape going quadratic at constant bits. */
   def nearDupPairs(df: DataFrame, idCol: String, vecCol: String, dims: Int,
                    threshold: Double, bits: Int = 8, tables: Int = 4,

@@ -28,7 +28,7 @@ import graft.functions.TextFunctions
   *     corpus-wide sorts of these keys are exactly what grew
   *     1.35×/decade in the fourth-decade probe, so round 15 swapped to
   *     the 8-byte key and round 16 measured the swap same-build
-  *     ([[graft.SpanKeyAb]]; numbers in PLANS.md round 16). Collision
+  *     (numbers in PLANS.md round 16). Collision
   *     tolerance: two distinct windows colliding (≈ W²/2⁶⁵ per corpus;
   *     ~3 % odds of a SINGLE collision at 10⁹ distinct windows) can
   *     only raise a `tot` — marking at most those two windows

@@ -511,7 +511,7 @@ object LlmQueries {
       // the `capped` exactness marker (false here by that contract —
       // spec-pinned) is metadata, not answer, so the golden projection
       // drops it
-      Dedup.simHashPairsAuto(plantedCorpus(s, d), "text", "doc_id",
+      Dedup.simHashPairsBudgeted(plantedCorpus(s, d), "text", "doc_id",
         maxHamming = graft.GoldenGen.ModelParams.SimHamming)
         .drop("capped")
         .orderBy(col("left_id"), col("right_id"))
@@ -1154,7 +1154,7 @@ object LlmQueries {
     },
 
     // AUTO-SIZED LSH (round 13): the query runs the production entry
-    // point — Similarity.nearDupPairsAuto sizes (bits, tables) from the
+    // point — Similarity.nearDupPairsBudgeted sizes (bits, tables) from the
     // corpus count via lshPlan (occupancy-driven bits keep candidates
     // LINEAR in n; recall-driven tables hold the 0.9 bound at that
     // width), the exact path a 100 TB corpus must take. The committed
@@ -1190,7 +1190,7 @@ object LlmQueries {
         |      >= ${graft.GoldenGen.ModelParams.NearDupThreshold}
         |ORDER BY left_id, right_id""".stripMargin) { (s, d) =>
       import graft.GoldenGen.ModelParams._
-      Similarity.nearDupPairsAuto(plantedEmbeddings(s, d), "vec_id",
+      Similarity.nearDupPairsBudgeted(plantedEmbeddings(s, d), "vec_id",
           "embedding", dims = Dims, threshold = NearDupThreshold,
           targetRecall = NearDupTargetRecall,
           targetBucketSize = NearDupBucketSize)

@@ -51,7 +51,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   // the t13 artifact must be sized by the SAME lshPlan the production
-  // entry point (nearDupPairsAuto) derives from the corpus count — a
+  // entry point (nearDupPairsBudgeted) derives from the corpus count — a
   // hand-edited or stale-width artifact would keep GoldenSpec's parity
   // test green (modelFrame reads the same plan) but betray the point of
   // the round-13 re-pin: the oracled row must exercise the auto-sized

@@ -8,56 +8,13 @@ import org.apache.spark.sql.functions._
   * deterministic, distribution-preserving, and free of artificial
   * near-dup families (verbatim copies would hand the detectors a
   * quadratic answer that says nothing about scaling). The generator is
-  * ONE plan at any factor (exploded copy index); these specs pin its
-  * values against the historical factor-way-union formulation so the
+  * ONE plan at any factor (exploded copy index); the events spec pins
+  * it against the historical factor-way-union formulation so the
   * recorded decade tables stay comparable across rounds. */
 class ScaleGenSpec extends SparkSpec {
   import testImplicits._
 
-  private def docs = Seq(
-    (0L, "alpha beta gamma delta epsilon", "en", "src0", 30L),
-    (1L, "beta gamma delta zeta eta theta iota", "en", "src1", 37L),
-    (2L, "gamma delta alpha beta kappa", "de", "src0", 28L))
-    .toDF("doc_id", "text", "lang", "source", "n_chars")
-
-  // ---- literal union-form references (the pre-round-12 generator) ----
-
-  private def unionDocs(src: DataFrame, factor: Int): DataFrame = {
-    val vocab = src.select(explode(split(trim(col("text")), "\\s+")).as("w"))
-      .where(length(col("w")) > 0).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    val vLit = typedLit(vocab)
-    val n = lit(vocab.length)
-    (0 until factor).map { k =>
-      if (k == 0) src
-      else {
-        val nTok = size(split(trim(col("text")), "\\s+"))
-        val fresh = array_join(
-          transform(sequence(lit(1), nTok), j =>
-            element_at(vLit,
-              (pmod(xxhash64(lit(k), col("doc_id"), j), n) + 1).cast("int"))),
-          " ")
-        src.select(
-          (col("doc_id") + lit(k.toLong * 10000000L)).as("doc_id"),
-          fresh.as("text"), col("lang"), col("source"),
-          length(fresh).cast("long").as("n_chars"))
-      }
-    }.reduce(_.unionAll(_))
-  }
-
-  private def unionEmbeddings(src: DataFrame, factor: Int): DataFrame =
-    (0 until factor).map { k =>
-      if (k == 0) src
-      else {
-        val dims = size(col("embedding"))
-        src.select(
-          (col("vec_id") + lit(k.toLong * 10000000L)).as("vec_id"),
-          transform(sequence(lit(0), dims - 1), i =>
-            element_at(col("embedding"), (pmod(i + lit(k), dims) + 1).cast("int")))
-            .as("embedding"),
-          col("label"))
-      }
-    }.reduce(_.unionAll(_))
+  // ---- literal union-form reference (the pre-round-12 generator) ----
 
   private def unionEvents(src: DataFrame, factor: Int): DataFrame =
     (0 until factor).map { k =>
@@ -69,105 +26,21 @@ class ScaleGenSpec extends SparkSpec {
         col("event_type"), col("value"), col("props"))
     }.reduce(_.unionAll(_))
 
-  private def embs = Seq(
-    (0L, Array(1.0f, 2.0f, 3.0f, 4.0f), 1),
-    (1L, Array(0.5f, 0.5f, -0.5f, -0.5f), 2)).toDF("vec_id", "embedding", "label")
-
   private def events = Seq(
     (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "click", 1.5, "{}"),
     (2L, java.sql.Timestamp.valueOf("2024-01-01 11:00:00"), 8L, "view", 0.5, "{}"))
     .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
-  test("scaleDocuments: factor x rows, fresh token draws from the same vocabulary") {
-    val out = ScaleGen.scaleDocuments(spark, docs, 4).cache()
-    assert(out.count() === 12)
-    // copy 0 is the original rows verbatim
-    assert(out.where(col("doc_id") < 1000000L).exceptAll(docs).isEmpty)
-    // copies draw from the SAME vocabulary...
-    val vocab = docs.select(explode(split(col("text"), " ")).as("w"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val copyWords = out.where(col("doc_id") >= 10000000L)
-      .select(explode(split(col("text"), " ")).as("w"))
-      .distinct().collect().map(_.getString(0)).toSet
-    assert(copyWords.subsetOf(vocab))
-    // ...with per-doc token counts preserved and texts NOT verbatim dups
-    val lens = out.select(col("doc_id") % 10000000L,
-        size(split(trim(col("text")), "\\s+")).as("n"))
-      .groupBy(col("(doc_id % 10000000)")).agg(countDistinct(col("n")).as("d"))
-      .collect()
-    assert(lens.forall(_.getLong(1) === 1L), "token count drifted across copies")
-    assert(out.select(col("text")).distinct().count() > 3,
-      "copies must not be verbatim duplicates")
-    // deterministic: same seed inputs, same output
-    assert(ScaleGen.scaleDocuments(spark, docs, 4).exceptAll(out).isEmpty)
-  }
-
   test("explode form reproduces the historical union form bit for bit") {
-    // documents and events at any factor; embeddings for factor <= dims
-    // (past dims the union form is WRONG — duplicate families — which
-    // is exactly what the explode form's sign-flip groups fix)
-    assert(ScaleGen.scaleDocuments(spark, docs, 5)
-      .exceptAll(unionDocs(docs, 5)).isEmpty)
-    assert(unionDocs(docs, 5)
-      .exceptAll(ScaleGen.scaleDocuments(spark, docs, 5)).isEmpty)
-    assert(ScaleGen.scaleEmbeddings(embs, 4)
-      .exceptAll(unionEmbeddings(embs, 4)).isEmpty)
     assert(ScaleGen.scaleEvents(events, 7)
       .exceptAll(unionEvents(events, 7)).isEmpty)
   }
 
-  test("scaleEmbeddings: cyclic shift preserves norms and count") {
-    val out = ScaleGen.scaleEmbeddings(embs, 3).cache()
-    assert(out.count() === 6)
-    val norms = out.select(col("vec_id") % 10000000L,
-        round(aggregate(col("embedding"), lit(0.0d),
-          (a, x) => a + x * x), 6).as("n2"))
-      .groupBy(col("(vec_id % 10000000)")).agg(countDistinct(col("n2")).as("d"))
-      .collect()
-    assert(norms.forall(_.getLong(1) === 1L), "cyclic shift changed a norm")
-    // copy 1 of vec 0 is the literal rotation
-    val r = out.where(col("vec_id") === 10000000L).head()
-      .getAs[scala.collection.Seq[Float]]("embedding")
-    assert(r.toSeq === Seq(2.0f, 3.0f, 4.0f, 1.0f))
-  }
-
-  test("scaleEmbeddings past the rotation period: no duplicate families, norms hold") {
-    // rotation alone has period dims (copy k == copy k+dims verbatim);
-    // the sign-flip group composition must keep every copy distinct
-    // while staying an isometry
-    // dims = 8 -> three full rotation groups at factor 24; asymmetric
-    // components so no base vector is its own rotation/reflection (the
-    // dims=4 spec vectors have internal symmetries that alias copies
-    // regardless of the generator)
-    val factor = 24
-    val wide = Seq(
-      (0L, Array(1.0f, 2.0f, 3.0f, 4.0f, 5.0f, 6.0f, 7.0f, 8.0f), 1),
-      (1L, Array(0.5f, 1.5f, -2.5f, 3.5f, -4.5f, 5.5f, -6.5f, 7.5f), 2))
-      .toDF("vec_id", "embedding", "label")
-    val out = ScaleGen.scaleEmbeddings(wide, factor).cache()
-    assert(out.count() === 2L * factor)
-    val distinctVecs = out.select(col("vec_id") % 10000000L, col("embedding"))
-      .distinct().count()
-    assert(distinctVecs === 2L * factor,
-      s"expected ${2 * factor} distinct (base, embedding) rows, got $distinctVecs — " +
-        "a rotation-period duplicate family leaked through")
-    val norms = out.select(col("vec_id") % 10000000L,
-        round(aggregate(col("embedding"), lit(0.0d),
-          (a, x) => a + x * x), 6).as("n2"))
-      .groupBy(col("(vec_id % 10000000)")).agg(countDistinct(col("n2")).as("d"))
-      .collect()
-    assert(norms.forall(_.getLong(1) === 1L), "sign flip changed a norm")
-    // group 0 (k < dims) is still the pure rotation — historical corpora
-    // at factor <= dims are unchanged by the flip machinery
-    assert(ScaleGen.scaleEmbeddings(embs, 4)
-      .exceptAll(unionEmbeddings(embs, 4)).isEmpty)
-  }
-
-  // ---- heaps mode (round 15): Heaps-law type growth ----
+  // ---- documents: Heaps-law type growth (round 15) ----
 
   /** Deterministic 200-doc × 30-token base over a 40-word vocabulary —
     * the shape of the driver corpus (tiny fixed vocab), which is
-    * exactly what the fixed resample saturates. */
+    * exactly what a fixed-vocabulary resample saturates. */
   private def heapsBase = {
     val words = (1 to 40).map(i => s"w$i")
     (0 until 200).map { d =>
@@ -193,9 +66,9 @@ class ScaleGenSpec extends SparkSpec {
 
   test("heaps documents: type space grows ~sqrt(N) — Heaps beta ≈ 0.5") {
     // factor 16 draws 5x the tokens of factor 4 (15 vs 3 fresh copies);
-    // beta = 0.5 predicts a sqrt(5) ≈ 2.24x type ratio. The fixed mode
-    // would give exactly 1.0 (same 40-word vocab at every factor) —
-    // that flatline is the round-14 saturation defect this mode fixes.
+    // beta = 0.5 predicts a sqrt(5) ≈ 2.24x type ratio. A fixed-vocabulary
+    // resample would give exactly 1.0 (same 40-word vocab at every
+    // factor) — the round-14 saturation defect this generator fixes.
     val v4 = copyTokens(ScaleGen.scaleDocumentsHeaps(spark, heapsBase, 4))
       .distinct().count()
     val v16 = copyTokens(ScaleGen.scaleDocumentsHeaps(spark, heapsBase, 16))
@@ -216,8 +89,8 @@ class ScaleGenSpec extends SparkSpec {
     assert(topShare > 0.02 && topShare < 0.12,
       s"head token share $topShare outside the smoothed band")
     // the round-14 defect in one number: count 3-gram shingle types in
-    // the rare-df band [2, 20] — fixed mode saturates this to zero as
-    // the factor grows; heaps mode must keep it populated
+    // the rare-df band [2, 20] — a fixed-vocabulary resample saturates
+    // this to zero as the factor grows; this generator keeps it populated
     val band = out.select(col("doc_id"),
         explode(graft.functions.TextFunctions.shingles(col("text"), 3)).as("sh"))
       .groupBy("sh").agg(countDistinct(col("doc_id")).as("df"))
@@ -234,7 +107,6 @@ class ScaleGenSpec extends SparkSpec {
     val smooth = (0 until d).map(i => (1.0 + 0.05 * math.sin(2 * math.Pi * i / d)).toFloat).toArray
     val base = Seq((0L, smooth, 1)).toDF("vec_id", "embedding", "label")
     val factor = 8
-    val legacy = ScaleGen.scaleEmbeddings(base, factor)
     val scat = ScaleGen.scaleEmbeddingsScattered(base, factor).cache()
     def vecs(df: DataFrame) = df.orderBy("vec_id").collect()
       .map(_.getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray)
@@ -242,13 +114,10 @@ class ScaleGenSpec extends SparkSpec {
       val dot = a.zip(b).map { case (x, y) => x * y }.sum
       dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
     }
-    val lv = vecs(legacy); val sv = vecs(scat)
+    val sv = vecs(scat)
     def maxCrossCos(vs: Array[Array[Double]]) = (for {
       i <- vs.indices; j <- vs.indices if i < j
     } yield math.abs(cos(vs(i), vs(j)))).max
-    // legacy pure rotations of a smooth vector: near-identical copies
-    assert(maxCrossCos(lv) > 0.9,
-      "the adversarial case should show the legacy family similarity")
     // scattered: unrelated-vector statistics
     assert(maxCrossCos(sv) < 0.6,
       s"scattered copies still correlated: ${maxCrossCos(sv)}")

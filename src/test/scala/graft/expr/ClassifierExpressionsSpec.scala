@@ -13,11 +13,17 @@ class ClassifierExpressionsSpec extends SparkSpec {
 
   private val dims = 64
 
-  // unicode, empty-string and repeated tokens on purpose
+  // unicode, empty-string, repeated and null tokens on purpose
   private def tokenFrame = Seq(
     (1L, Seq("the", "spark", "the", "µm", "日本語")),
     (2L, Seq.empty[String]),
-    (3L, Seq("x"))).toDF("id", "toks")
+    (3L, Seq("x")),
+    (4L, Seq("y", null))).toDF("id", "toks")
+
+  /** The message chain of a (possibly task-wrapped) failure. */
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
 
   test("graft_md5_buckets equals the composed transform+md5+conv chain") {
     val native = tokenFrame.select(col("id"),
@@ -39,18 +45,30 @@ class ClassifierExpressionsSpec extends SparkSpec {
       aggregate(bs, lit(0L), (acc, b) => acc + element_at(wLit, b + 1)).as("s"))
     assert(native.orderBy("id").collect().toSeq ===
       composed.orderBy("id").collect().toSeq)
+    // SQL misuse: buckets hashed at a larger dims than the weights
+    val misuse = intercept[Exception] {
+      Seq(Seq(3, 4096)).toDF("bs")
+        .select(call_function("graft_lr_dot", col("bs"), wLit)).collect()
+    }
+    assert(messages(misuse).exists(_.contains(
+      "graft_lr_dot: bucket id 4096 is outside the 65-element weights")),
+      messages(misuse).mkString(" <- "))
   }
 
   test("graft_logit_grad equals the explode+groupBy gradient within 1e-12") {
     val w: IndexedSeq[Double] =
       (0 to dims).map(i => math.sin(i.toDouble) / 10.0)
     val wLit = typedLit(w)
+    // the last two rows: a null bucket element, and a null n
     val feats = Seq(
-      (1.0, Seq(0, 3, 3, 17)),
-      (0.0, Seq(5)),
-      (1.0, Seq.empty[Int]),
-      (0.0, Seq(0, 63, 17))).toDF("y", "bs")
-      .select(col("y"), size(col("bs")).cast("double").as("n"), col("bs"))
+      (1.0, Seq(Some(0), Some(3), Some(3), Some(17)), true),
+      (0.0, Seq(Some(5)), true),
+      (1.0, Seq.empty[Option[Int]], true),
+      (0.0, Seq(Some(0), Some(63), Some(17)), true),
+      (0.0, Seq(Some(7), None, Some(7)), true),
+      (1.0, Seq(Some(2), Some(9)), false)).toDF("y", "bs", "hasN")
+      .select(col("y"),
+        when(col("hasN"), size(col("bs")).cast("double")).as("n"), col("bs"))
       .repartition(3)
 
     val native = feats.select(call_function("graft_logit_grad",
@@ -71,6 +89,8 @@ class ClassifierExpressionsSpec extends SparkSpec {
         array(struct(lit(dims).as("b"), col("e").as("g")),
           struct(lit(dims + 1).as("b"), lit(1.0).as("g"))))).as("c"))
       .groupBy(col("c.b").as("b")).agg(sum(col("c.g")).as("g"))
+      // a null bucket element's group is no cell; an all-null sum adds 0
+      .where(col("b").isNotNull && col("g").isNotNull)
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
     assert(native.length === dims + 2)
@@ -78,5 +98,14 @@ class ClassifierExpressionsSpec extends SparkSpec {
       assert(math.abs(native(b) - composed.getOrElse(b, 0.0)) < 1e-12,
         s"cell $b: ${native(b)} vs ${composed.getOrElse(b, 0.0)}")
     }
+    // SQL misuse: buckets hashed at a larger dims than the weights
+    val misuse = intercept[Exception] {
+      Seq((1.0, 2.0, Seq(3, 4096))).toDF("y", "n", "bs")
+        .select(call_function("graft_logit_grad",
+          col("y"), col("n"), col("bs"), wLit)).collect()
+    }
+    assert(messages(misuse).exists(_.contains(
+      "graft_logit_grad: bucket id 4096 is outside the 65-element weights")),
+      messages(misuse).mkString(" <- "))
   }
 }

@@ -186,7 +186,7 @@ class DedupSpec extends SparkSpec {
 
   test("simHashPairsBudgeted is exact below capAbove and sizes caps from the corpus histogram") {
     // below the cap threshold the budgeted path must be the capless
-    // exact Hamming ball — same contract as simHashPairsAuto
+    // exact Hamming ball
     val maxH = 6
     val exact = Dedup.simHashPairs(planted, "text", "doc_id", maxH,
       blocks = maxH + 1).select("left_id", "right_id").collect()
@@ -257,39 +257,28 @@ class DedupSpec extends SparkSpec {
       streamPerDoc = 1.0) == Some(1 << 30))
   }
 
-  test("simHashPairsAuto IS the budgeted path and stamps the capped marker") {
+  test("simHashPairsBudgeted stamps the capped marker: exact when capless, a subset when capped") {
     val maxH = 6
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("left_id", "right_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // capless default (every oracle scale): marker false — per-row and
     // in column metadata — and the answer is the exact Hamming ball
-    val auto = Dedup.simHashPairsAuto(planted, "text", "doc_id", maxH)
-    assert(!auto.schema("capped").metadata.getBoolean("graft.capped"))
-    assert(auto.select("capped").distinct().collect()
+    val capless = Dedup.simHashPairsBudgeted(planted, "text", "doc_id", maxH)
+    assert(!capless.schema("capped").metadata.getBoolean("graft.capped"))
+    assert(capless.select("capped").distinct().collect()
       .map(_.getBoolean(0)).toSeq == Seq(false))
     val exact = pairSet(Dedup.simHashPairs(planted, "text", "doc_id", maxH,
       blocks = maxH + 1))
-    assert(pairSet(auto) == exact)
-    // forced above-threshold with a hostile budget: auto == budgeted
-    // (r18 verdict item 1 — the obvious entry point inherits the budget
-    // contract), the marker reads true, and the result is a subset of
-    // the exact ball
-    val a = Dedup.simHashPairsAuto(planted, "text", "doc_id", maxH,
+    assert(pairSet(capless) == exact)
+    // forced above-threshold with a hostile budget: the marker reads
+    // true, and the result is a subset of the exact ball
+    val a = Dedup.simHashPairsBudgeted(planted, "text", "doc_id", maxH,
       streamPerDoc = 0.001, capAbove = 10L)
-    val b = Dedup.simHashPairsBudgeted(planted, "text", "doc_id", maxH,
-      streamPerDoc = 0.001, capAbove = 10L)
-    assert(pairSet(a) == pairSet(b))
     assert(a.schema("capped").metadata.getBoolean("graft.capped"))
-    assert(b.schema("capped").metadata.getBoolean("graft.capped"))
     val aRows = a.select("capped").distinct().collect().map(_.getBoolean(0))
     assert(aRows.isEmpty || aRows.toSeq == Seq(true))
     assert(pairSet(a).subsetOf(exact), "cap invented pairs")
-    // knownN (r18 verdict item 4): supplying the pre-computed count
-    // skips the count pass and is answer-invariant
-    val known = Dedup.simHashPairsBudgeted(planted, "text", "doc_id", maxH,
-      streamPerDoc = 0.001, capAbove = 10L, knownN = Some(planted.count()))
-    assert(pairSet(known) == pairSet(b))
   }
 
   test("jaccardPairs finds planted near-duplicates above threshold") {

@@ -142,16 +142,17 @@ class SimilaritySpec extends SparkSpec {
 
   test("nearDupPairsBudgeted and capped nearDupPairs hold the exact-verify contract") {
     // below capAbove the budgeted path is the capless lshPlan-width
-    // answer — same contract as nearDupPairsAuto
-    val auto = Similarity.nearDupPairsAuto(plantedEmb, "vec_id", "embedding",
-        dims = 64, threshold = 0.95)
+    // answer
+    val (planBits, planTables) = Similarity.lshPlan(plantedEmb.count(), 0.95)
+    val planned = Similarity.nearDupPairs(plantedEmb, "vec_id", "embedding",
+        dims = 64, threshold = 0.95, bits = planBits, tables = planTables)
       .select("left_id", "right_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val budgeted = Similarity.nearDupPairsBudgeted(plantedEmb, "vec_id",
         "embedding", dims = 64, threshold = 0.95)
       .select("left_id", "right_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(budgeted == auto)
+    assert(budgeted == planned)
     // a cap that binds nothing (larger than every bucket) is answer-
     // invariant; a binding cap returns a SUBSET whose survivors still
     // meet the exact verify threshold
@@ -180,39 +181,29 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("nearDupPairsAuto IS the budgeted path and stamps the capped marker") {
+  test("nearDupPairsBudgeted stamps the capped marker: exact when capless, a subset when capped") {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("left_id", "right_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // capless default (every oracle scale): marker false per-row and in
     // column metadata; answer is the exact-verify capless set
-    val auto = Similarity.nearDupPairsAuto(plantedEmb, "vec_id", "embedding",
-      dims = 64, threshold = 0.95)
-    assert(!auto.schema("capped").metadata.getBoolean("graft.capped"))
-    assert(auto.select("capped").distinct().collect()
+    val capless = Similarity.nearDupPairsBudgeted(plantedEmb, "vec_id",
+      "embedding", dims = 64, threshold = 0.95)
+    assert(!capless.schema("capped").metadata.getBoolean("graft.capped"))
+    assert(capless.select("capped").distinct().collect()
       .map(_.getBoolean(0)).toSeq == Seq(false))
-    // forced above-threshold with a hostile budget: auto == budgeted
-    // (r18 verdict item 1), the marker reads true even if the binding
-    // cap empties the result on this tiny fixture, and survivors are a
-    // subset of the capless answer that still meets the exact verify
-    val a = Similarity.nearDupPairsAuto(plantedEmb, "vec_id", "embedding",
-      dims = 64, threshold = 0.95, capAbove = 10L, streamPerVec = 0.001)
-    val b = Similarity.nearDupPairsBudgeted(plantedEmb, "vec_id", "embedding",
+    // forced above-threshold with a hostile budget: the marker reads
+    // true even if the binding cap empties the result on this tiny
+    // fixture, and survivors are a subset of the capless answer that
+    // still meets the exact verify
+    val a = Similarity.nearDupPairsBudgeted(plantedEmb, "vec_id", "embedding",
       dims = 64, threshold = 0.95, streamPerVec = 0.001, capAbove = 10L)
-    assert(pairSet(a) == pairSet(b))
     assert(a.schema("capped").metadata.getBoolean("graft.capped"))
-    assert(b.schema("capped").metadata.getBoolean("graft.capped"))
     val aRows = a.select("capped").distinct().collect().map(_.getBoolean(0))
     assert(aRows.isEmpty || aRows.toSeq == Seq(true))
-    assert(pairSet(a).subsetOf(pairSet(auto)), "cap invented pairs")
+    assert(pairSet(a).subsetOf(pairSet(capless)), "cap invented pairs")
     a.select("cosine_sim").collect().foreach(r =>
       assert(r.getDouble(0) >= 0.95))
-    // knownN (r18 verdict item 4): supplying the pre-computed count
-    // skips the count pass and is answer-invariant
-    val known = Similarity.nearDupPairsBudgeted(plantedEmb, "vec_id",
-      "embedding", dims = 64, threshold = 0.95, streamPerVec = 0.001,
-      capAbove = 10L, knownN = Some(plantedEmb.count()))
-    assert(pairSet(known) == pairSet(b))
   }
 
   test("lshPlan: occupancy-driven bits, recall-driven tables, caps honored") {
@@ -237,22 +228,22 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.lshPlan(0L, 0.95)._1 === 4)
   }
 
-  test("nearDupPairsAuto recovers the planted pairs via the sized plan") {
-    val auto = Similarity.nearDupPairsAuto(plantedEmb, "vec_id", "embedding",
-        dims = 64, threshold = 0.95)
+  test("nearDupPairsBudgeted recovers the planted pairs via the sized plan") {
+    val sized = Similarity.nearDupPairsBudgeted(plantedEmb, "vec_id",
+        "embedding", dims = 64, threshold = 0.95)
       .select("left_id", "right_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val ids = embeddings.select("vec_id").collect().map(_.getLong(0))
-    val recovered = ids.count(id => auto.contains((id, id + 1000000L)))
+    val recovered = ids.count(id => sized.contains((id, id + 1000000L)))
     assert(recovered.toDouble / ids.length >= 0.9,
       s"auto-sized recall ${recovered}/${ids.length}")
-    // and auto == the fixed-bits call at the plan it chose
+    // and sized == the fixed-bits call at the plan it chose
     val (bits, tables) = Similarity.lshPlan(plantedEmb.count(), 0.95)
     val manual = Similarity.nearDupPairs(plantedEmb, "vec_id", "embedding",
         dims = 64, threshold = 0.95, bits = bits, tables = tables)
       .select("left_id", "right_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto === manual)
+    assert(sized === manual)
   }
 
   test("lshBucket is deterministic and within [0, 2^bits)") {

@@ -159,4 +159,35 @@ class WindowedStatsSpec extends SparkSpec {
       spark.streams.removeListener(listener)
     }
   }
+
+  test("T8: a failed named query flags its own heartbeat key, not its id") {
+    val kv = new InMemoryKvSink()
+    val listener = new HealthListener(kv, ttlSeconds = 180)
+    spark.streams.addListener(listener)
+    val dir = Files.createTempDirectory("hb_fail_src")
+    val ckpt = Files.createTempDirectory("hb_fail_ckpt")
+    Seq(1, 2, 3).toDF("v").coalesce(1).write.parquet(dir.toString + "/b1")
+    val q = spark.readStream
+      .schema(StructType(Seq(StructField("v", IntegerType))))
+      .parquet(dir.toString + "/*")
+      .writeStream.queryName("hb_failing")
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new IllegalStateException("sink down")
+      }
+      .option("checkpointLocation", ckpt.toString).start()
+    try {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.awaitTermination()
+      }
+      // listener events are delivered asynchronously
+      val deadline = System.currentTimeMillis + 10000
+      while (!kv.get("health:heartbeat:hb_failing").contains("0")
+        && System.currentTimeMillis < deadline) Thread.sleep(100)
+      assert(kv.get("health:heartbeat:hb_failing").contains("0"))
+      assert(kv.get(s"health:heartbeat:${q.id}").isEmpty)
+    } finally {
+      q.stop()
+      spark.streams.removeListener(listener)
+    }
+  }
 }
