@@ -1,6 +1,6 @@
 package graft.apps
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Paths
 import java.time.LocalDateTime
 import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.ChannelStats
-import graft.sinks.{CsvSink, KvSink}
+import graft.sinks.KvSink
 
 /** The LPI `.dat` analysis — udbf_file_analysis.py:24-91 as a Spark
   * batch over one admitted file:
@@ -17,11 +17,13 @@ import graft.sinks.{CsvSink, KvSink}
   *   F1 suffix gate → F3/F7 size-band health by sample-rate routing →
   *   S1 udbf decode → F2 filename-alignment check → F4 warm-up trim
   *   (first 10 s dropped for cut files) → F5 (ts excluded by
-  *   construction) → A1 round(mean/min/max, 3) per channel →
-  *   K1 `<stem>_stats.csv` (capitalized header, reference format
-  *   DataConverterUDBF.py:260-265) → K3 `stats:<stem>` KV hash with
-  *   `{sensor}:mean/min/max` fields, TTL 60 (udbf_file_analysis.py:69-87)
-  *   with the A7 empty-mapping guard.
+  *   construction) → A1 round(mean/min/max, 3) per channel, collected
+  *   to the driver in ONE Spark action → from those rows, K1
+  *   `<stem>_stats.csv` (capitalized header, reference format
+  *   DataConverterUDBF.py:260-265, written on the driver) and K3
+  *   `stats:<stem>` KV hash with `{sensor}:mean/min/max` fields, TTL 60
+  *   (udbf_file_analysis.py:69-87) with the A7 empty-mapping guard
+  *   ([[PublishStats]]).
   *
   * Archive/dead-letter (K7/T7) belongs to the enclosing
   * [[graft.streaming.FilePipeline]].
@@ -71,23 +73,10 @@ final class LpiAnalysis(
 
     val stats = ChannelStats(trimmed, channels) // A1, round 3 (P14)
 
-    // K1 — reference CSV format: Sensor,Mean,Minimum,Maximum
-    CsvSink.writeSingleCsv(
-      stats.select(col("sensor").as("Sensor"), col("mean").as("Mean"),
-        col("minimum").as("Minimum"), col("maximum").as("Maximum")),
-      Paths.get(statsDir, s"${stem}_stats.csv"))
-
-    // K3 — stats:<stem> hash; control-plane collect, contractually one
+    // K1 + K3 from one action: control-plane collect, contractually one
     // row per channel of THIS file (ChannelStats groups by sensor name)
-    val mapping = graft.core.Bounded
-      .collect(stats, channels.size, "LpiAnalysis.stats").flatMap { r =>
-      val sensor = r.getString(0)
-      Seq(s"$sensor:mean" -> r.getDouble(1).toString,
-        s"$sensor:min" -> r.getDouble(2).toString,
-        s"$sensor:max" -> r.getDouble(3).toString)
-    }.toMap
-    if (mapping.nonEmpty) // A7
-      kv.hset(s"stats:$stem", mapping, Some(ttlSeconds))
+    PublishStats(graft.core.Bounded.collect(stats, channels.size, "LpiAnalysis.stats"),
+      statsDir, stem, kv, ttlSeconds)
   }
 }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType}
 
 import graft.operators.ChannelStats
-import graft.sinks.{CsvSink, KvSink}
+import graft.sinks.KvSink
 
 /** The MIST acoustic-emission CSV analysis. The reference ships this as
   * an empty stub (conv/scripts/mist_file_analysis.py:27-29) while its
@@ -15,7 +15,8 @@ import graft.sinks.{CsvSink, KvSink}
   *
   *   F1 gate (.csv) → header CSV scan → per-numeric-column channel
   *   stats (A1: round(mean/min/max, 3), non-numeric columns excluded —
-  *   the F5 analogue) → K1 `<stem>_stats.csv` + K3 `stats:<stem>` hash.
+  *   the F5 analogue), collected once → K1 `<stem>_stats.csv` + K3
+  *   `stats:<stem>` hash from the same rows.
   */
 final class MistAnalysis(
     spark: SparkSession,
@@ -37,19 +38,8 @@ final class MistAnalysis(
     if (numericCols.isEmpty)
       throw new IllegalArgumentException(s"No numeric channels in $file")
 
-    val stats = ChannelStats(df, numericCols)
-    CsvSink.writeSingleCsv(
-      stats.selectExpr("sensor as Sensor", "mean as Mean",
-        "minimum as Minimum", "maximum as Maximum"),
-      Paths.get(statsDir, s"${stem}_stats.csv"))
-
     // one row per numeric channel of ONE file — schema-width-bounded
-    val mapping = graft.core.Bounded.collect(stats, 10000,
-        "MistAnalysis channel stats").flatMap { r =>
-      Seq(s"${r.getString(0)}:mean" -> r.getDouble(1).toString,
-        s"${r.getString(0)}:min" -> r.getDouble(2).toString,
-        s"${r.getString(0)}:max" -> r.getDouble(3).toString)
-    }.toMap
-    if (mapping.nonEmpty) kv.hset(s"stats:$stem", mapping, Some(ttlSeconds))
+    PublishStats(graft.core.Bounded.collect(ChannelStats(df, numericCols), 10000,
+      "MistAnalysis channel stats"), statsDir, stem, kv, ttlSeconds)
   }
 }

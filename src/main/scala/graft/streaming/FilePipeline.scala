@@ -22,7 +22,8 @@ import graft.sinks.KvSink
   *   - The per-batch `collect()` is control-plane only: it returns at
   *     most `maxFilesPerTrigger` path strings, never data rows.
   *   - Each file runs the supplied `process` (a Spark batch job); an
-  *     exception dead-letters the file to `failedDir` and sets
+  *     exception is logged at WARN (file, exception class and message,
+  *     throwable), dead-letters the file to `failedDir` and sets
   *     `health:<name>_file_processing=1` (TTL 60), success archives to
   *     `finishedDir` and sets 0 (Pipeline.py:193-204).
   */
@@ -62,6 +63,10 @@ final class FilePipeline(
       true
     } catch {
       case e: Exception =>
+        // K8: the dead-letter cause, one WARN line with the throwable
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"[graft] FilePipeline $name: dead-lettering $p: " +
+            s"${e.getClass.getName}: ${e.getMessage}", e)
         try {
           Files.move(p, Paths.get(failedDir).resolve(p.getFileName),
             StandardCopyOption.REPLACE_EXISTING)

@@ -5,9 +5,14 @@ import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import graft.sinks.{InMemoryKvSink, JsonDocStore}
 import graft.sources.KvScan
+import graft.sources.udbf.UdbfWriter
+import graft.sources.udbf.UdbfWriter.ChannelSpec
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions._
 
-/** The SENS / MIST / Event app flows plus the S6 KV scan. */
+/** The SENS / MIST / LPI / Event app flows plus the S6 KV scan. */
 class AppsSpec extends SparkSpec {
   import testImplicits._
 
@@ -68,6 +73,45 @@ class AppsSpec extends SparkSpec {
         |counts,7.0,5.0,9.0
         |""".stripMargin)
     assert(kv.hget("stats:ae_2024-03-15_12-00-00", "amplitude:mean").contains("20.0"))
+  }
+
+  test("LPI: one Spark execution per aligned file, two per cut file (decode once)") {
+    val dir = Files.createTempDirectory("lpi_execs")
+    val stats = Files.createTempDirectory("lpi_execs_stats")
+    val chans = Seq(ChannelSpec("ch_a", "V"), ChannelSpec("ch_b", "°C"))
+    val aligned = dir.resolve("fhe_100hz_2024-03-15_12-00-00.dat")
+    val cut = dir.resolve("fhe_100hz_2024-03-15_12-03-27.dat")
+    UdbfWriter.write(aligned, chans, 2000, (i, j) => (i + j).toDouble,
+      1710504000000000L, 100.0)
+    UdbfWriter.write(cut, chans, 2000, (i, j) => (i + j).toDouble,
+      1710504207000000L, 100.0)
+    val kv = new InMemoryKvSink()
+    val lpi = new LpiAnalysis(spark, stats.toString, kv)
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionEnd => ended.incrementAndGet()
+        case _ =>
+      }
+    }
+    def executions(file: java.nio.file.Path): Int = {
+      ListenerBusDrain(spark.sparkContext)
+      ended.set(0)
+      lpi.processFile(file.toString)
+      ListenerBusDrain(spark.sparkContext)
+      ended.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(executions(aligned) == 1) // stats only
+      assert(executions(cut) == 2) // F4's min(ts) trim + stats
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(kv.hget("stats:fhe_100hz_2024-03-15_12-00-00", "ch_b:max").contains("2000.0"))
+    assert(Files.readString(stats.resolve("fhe_100hz_2024-03-15_12-03-27_stats.csv")) ==
+      """Sensor,Mean,Minimum,Maximum
+        |ch_a,1499.5,1000.0,1999.0
+        |ch_b,1500.5,1001.0,2000.0
+        |""".stripMargin)
   }
 
   test("Event: gate → fetch → validate → hash → dedup → idempotent store") {

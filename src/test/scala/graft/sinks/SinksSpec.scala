@@ -2,12 +2,13 @@ package graft.sinks
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
+
 import graft.SparkSpec
 
 /** K1/K3/K4/K6 sink semantics: TTL expiry, single-file CSV, register
   * packing and one-shot consumption, idempotent atomic JSON store. */
 class SinksSpec extends SparkSpec {
-  import testImplicits._
 
   test("K3: KV hash with TTL expires on the injected clock") {
     var now = 1000L
@@ -31,14 +32,21 @@ class SinksSpec extends SparkSpec {
     assert(kv.scan("stats:*") == Seq("stats:f1", "stats:f2"))
   }
 
-  test("K1: writeSingleCsv produces one exact file, not a directory") {
+  test("K1: CsvSink.write produces one exact file, not a directory") {
     val dir = Files.createTempDirectory("csv_sink")
     val target = dir.resolve("out_stats.csv")
-    val df = Seq(("s1", 1.5), ("s2", 2.0)).toDF("Sensor", "Mean")
-      .orderBy("Sensor")
-    CsvSink.writeSingleCsv(df, target)
+    val header = Seq("Sensor", "Mean")
+    CsvSink.write(target, header, Seq(Row("s1", 1.5), Row("s2", 2.0)))
     assert(Files.readString(target) == "Sensor,Mean\ns1,1.5\ns2,2.0\n")
-    // nothing else left behind (staging dir removed)
+    // RFC 4180 quoting with doubled quotes (pandas to_csv); null → empty
+    CsvSink.write(target, header, Seq(Row("a,b", 1.0), Row("say \"hi\"", -0.5),
+      Row("two\r\nlines", 0.0), Row("s3", null), Row(null, 1.0E-4)))
+    assert(Files.readString(target) == "Sensor,Mean\n\"a,b\",1.0\n" +
+      "\"say \"\"hi\"\"\",-0.5\n\"two\r\nlines\",0.0\ns3,\n,1.0E-4\n")
+    // an empty row set writes the header line only, replacing the file
+    CsvSink.write(target, header, Nil)
+    assert(Files.readString(target) == "Sensor,Mean\n")
+    // nothing else left behind (no temp file)
     assert(Files.list(dir).count() == 1)
   }
 

@@ -2,6 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+
 import graft.SparkSpec
 import graft.apps.{LpiAnalysis, SensAnalysis}
 import graft.sinks.InMemoryKvSink
@@ -90,13 +95,38 @@ class StreamingSpec extends SparkSpec {
       process = p => require(!p.contains("bad"), "boom"))
     val good = staging.resolve("good.dat"); val bad = staging.resolve("bad.dat")
     Files.write(good, Array[Byte](1)); Files.write(bad, Array[Byte](2))
-    assert(pipeline.processOne(good.toString))
-    assert(kv.get("health:t7_file_processing").contains("0"))
-    assert(Files.exists(finished.resolve("good.dat")))
-    assert(!pipeline.processOne(bad.toString))
+    // K8: capture what FilePipeline logs, next to its configured appenders
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]
+    val appender = new AbstractAppender("t7-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    appender.start()
+    val logger = LogManager.getContext(false)
+      .getLogger(classOf[FilePipeline].getName).asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    try {
+      assert(pipeline.processOne(good.toString))
+      assert(kv.get("health:t7_file_processing").contains("0"))
+      assert(Files.exists(finished.resolve("good.dat")))
+      assert(events.isEmpty, "a processed file logs no dead-letter event")
+      assert(!pipeline.processOne(bad.toString))
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
     assert(kv.get("health:t7_file_processing").contains("1"))
     assert(Files.exists(failed.resolve("bad.dat")))
     assert(!Files.exists(bad))
+    // the dead-letter cause: one WARN naming file, exception and message
+    assert(events.size == 1)
+    val e = events.peek()
+    assert(e.getLevel == Level.WARN)
+    val msg = e.getMessage.getFormattedMessage
+    assert(msg.contains(bad.toString), msg)
+    assert(msg.contains("java.lang.IllegalArgumentException: requirement failed: boom"), msg)
+    assert(e.getThrown.isInstanceOf[IllegalArgumentException])
+    assert(e.getThrown.getMessage == "requirement failed: boom")
   }
 
   test("E2E: gate → stream → udbf decode → stats CSV + KV → archive; corrupt file dead-letters") {
@@ -121,18 +151,22 @@ class StreamingSpec extends SparkSpec {
       (i, _) => if (i < 1000) 0.0 else 5.0, 1710504207000000L, 100.0)
     Files.write(input.resolve("corrupt_100hz_2024-03-15_12-10-00.dat"),
       "this is not a udbf file".getBytes)
+    // a cut file shorter than the 10 s warm-up: F4 leaves no rows
+    val trimmedName = "fhe_100hz_2024-03-15_12-05-27.dat"
+    UdbfWriter.write(input.resolve(trimmedName), Seq(ChannelSpec("ch_a", "V")), 500,
+      (i, _) => i.toDouble, 1710504327000000L, 100.0)
 
     val alignedBytes = Files.size(input.resolve(alignedName))
     val kv = new InMemoryKvSink()
     val analysis = new LpiAnalysis(spark, stats.toString, kv,
       refSizesKb = Map("100hz" -> alignedBytes / 1000.0))
 
-    // T2/T3: admit all three (aged clock), oldest first
+    // T2/T3: admit all four (aged clock), oldest first
     var offset = 0L
     val gate = new StabilityGate(input, staging,
       clock = () => System.currentTimeMillis + offset)
     gate.poll(); offset += 41000L
-    assert(gate.pollAll().size == 3)
+    assert(gate.pollAll().size == 4)
 
     val pipeline = new FilePipeline(spark, "lpi_100hz", staging.toString,
       finished.toString, failed.toString, ckpt.toString, kv,
@@ -144,6 +178,7 @@ class StreamingSpec extends SparkSpec {
     assert(Files.exists(finished.resolve(alignedName)))
     assert(Files.exists(finished.resolve(cutName)))
     assert(Files.exists(failed.resolve("corrupt_100hz_2024-03-15_12-10-00.dat")))
+    assert(Files.exists(finished.resolve(trimmedName)))
     // health flag set by the last processed file (batch order among
     // same-mtime files is not deterministic; per-file semantics are
     // covered by the T7 test)
@@ -164,6 +199,12 @@ class StreamingSpec extends SparkSpec {
       """Sensor,Mean,Minimum,Maximum
         |ch_a,5.0,5.0,5.0
         |""".stripMargin)
+
+    // F4 leaves the short cut file no rows: a header-only CSV, no stats
+    // hash (A7), and the file is archived, not dead-lettered
+    assert(Files.readString(stats.resolve("fhe_100hz_2024-03-15_12-05-27_stats.csv")) ==
+      "Sensor,Mean,Minimum,Maximum\n")
+    assert(!kv.scan("stats:*").contains("stats:fhe_100hz_2024-03-15_12-05-27"))
 
     // K3: stats hash with TTL, F3 size health was written. The VALUE is
     // last-processed-file state: the corrupt file's aligned name gets a
