@@ -1,9 +1,6 @@
 package graft.apps
 
 import java.nio.file.Paths
-import java.time.LocalDateTime
-import java.time.ZoneOffset
-import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -63,11 +60,11 @@ final class LpiAnalysis(
     val channels = df.columns.filterNot(_ == "ts").toSeq // F5
 
     // F4 — warm-up trim: cut files drop their first 10 seconds
-    // (sample_rate * 10 rows ≡ ts < min(ts) + 10 s for a monotone clock)
+    // (sample_rate * 10 rows ≡ ts < min(ts) + 10 s for a monotone clock);
+    // a cut file with no frames has no min(ts) and stays empty
     val trimmed =
       if (aligned) df
-      else {
-        val firstTs = df.agg(min(col("ts"))).head().getTimestamp(0)
+      else Option(df.agg(min(col("ts"))).head().getTimestamp(0)).fold(df) { firstTs =>
         df.filter(col("ts") >= lit(new java.sql.Timestamp(firstTs.getTime + 10000L)))
       }
 
@@ -81,17 +78,12 @@ final class LpiAnalysis(
 }
 
 object LpiAnalysis {
-  private val TsRe = """(\d{4}-\d{2}-\d{2})_(\d{2}-\d{2}-\d{2})""".r
-  private val TsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH-mm-ss")
-
   /** F2 — a file is a full (uncut) 10-minute window iff its filename
     * timestamp sits on a 10-minute boundary; unparsable names count as
     * cut (DataConverterUDBF.py:232-238). */
   def isAligned(fileName: String): Boolean =
-    TsRe.findFirstMatchIn(fileName).exists { m =>
-      val ts = LocalDateTime.parse(s"${m.group(1)} ${m.group(2)}", TsFmt)
-      ts.getMinute % 10 == 0 && ts.getSecond == 0
-    }
+    graft.streaming.StabilityGate.filenameTs(fileName)
+      .exists(ts => ts.getMinute % 10 == 0 && ts.getSecond == 0)
 
   /** F7 — sample-rate routing from the filename
     * (udbf_file_analysis.py:57-62). */

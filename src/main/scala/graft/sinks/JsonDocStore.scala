@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** K6 — atomic, idempotent JSON document store (restapi/app_fs.py:56-69,
   * 123-127): write to a temp file in the same directory then rename into
@@ -42,15 +43,15 @@ final class JsonDocStore(dir: Path) {
   /** latest.json, else newest event_*.json by mtime, else None. */
   def latest(): Option[String] =
     if (Files.exists(latestPath)) Some(Files.readString(latestPath))
-    else Files.list(dir).iterator().asScala
+    else Using.resource(Files.list(dir))(_.iterator().asScala
       .filter(p => p.getFileName.toString.matches("event_.*\\.json"))
-      .maxByOption(p => Files.getLastModifiedTime(p).toMillis)
+      .maxByOption(p => Files.getLastModifiedTime(p).toMillis))
       .map(Files.readString)
 
   def ids(): Seq[String] =
-    Files.list(dir).iterator().asScala
+    Using.resource(Files.list(dir))(_.iterator().asScala
       .map(_.getFileName.toString)
       .collect { case s if s.startsWith("event_") && s.endsWith(".json") =>
         s.stripPrefix("event_").stripSuffix(".json") }
-      .toSeq.sorted
+      .toSeq.sorted)
 }

@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** K5/D3 — the uploader flow (uploader/main.py:35-135) engine-side:
   * pick the newest *settled* finished file (size unchanged across a
@@ -52,7 +53,8 @@ final class UploadSink(
   /** One sweep of the 30 s poll loop (uploader/main.py:101,135). */
   def sweep(): Outcome = {
     val files = if (Files.isDirectory(finishedDir))
-      Files.list(finishedDir).iterator().asScala.filter(Files.isRegularFile(_)).toVector
+      Using.resource(Files.list(finishedDir))(
+        _.iterator().asScala.filter(Files.isRegularFile(_)).toVector)
     else Vector.empty
     // A3 — newest by mtime
     files.maxByOption(p => Files.getLastModifiedTime(p).toMillis) match {

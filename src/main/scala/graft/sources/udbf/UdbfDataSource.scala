@@ -59,21 +59,15 @@ object UdbfDataSource {
   val TimestampColumn = "ts"
   val DefaultChunkFrames = 100000
 
-  /** The raw `path`/`paths` option values, before glob/dir expansion —
-    * what the STREAMING source needs (it re-lists per poll, so a
-    * resolved snapshot would freeze the file set at plan time). */
-  def rawPaths(options: CaseInsensitiveStringMap): Seq[String] =
-    Option(options.get("paths")) match {
-      case Some(json) => "\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findAllMatchIn(json).map(_.group(1)).toSeq
-      case None => Option(options.get("path")).toSeq
-    }
-
   /** Expand the `path`/`paths` options to concrete `.dat` files (glob +
     * one-level directory listing), driver-side. */
   def resolveFiles(options: CaseInsensitiveStringMap): Seq[String] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    val raw: Seq[String] = rawPaths(options)
+    val raw: Seq[String] = Option(options.get("paths")) match {
+      case Some(json) => "\"((?:[^\"\\\\]|\\\\.)*)\"".r
+        .findAllMatchIn(json).map(_.group(1)).toSeq
+      case None => Option(options.get("path")).toSeq
+    }
     raw.flatMap { p =>
       val hp = new HPath(p)
       val fs = hp.getFileSystem(conf)
@@ -133,8 +127,7 @@ final class UdbfTable(tableSchema: StructType, options: CaseInsensitiveStringMap
   override def name(): String = "udbf:" + options.getOrDefault("path", "")
   override def schema(): StructType = tableSchema
   override def capabilities(): JSet[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
     // merge table-creation options with read options (read options win)
     val merged = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
@@ -148,48 +141,31 @@ final class UdbfScanBuilder(fullSchema: StructType, options: CaseInsensitiveStri
   private var required: StructType = fullSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new UdbfScan(
-    // lazily resolved: the streaming path never snapshots the file set
-    () => UdbfDataSource.resolveFiles(options),
-    required,
-    options.getInt("chunkFrames", UdbfDataSource.DefaultChunkFrames),
-    options.getBoolean("columnar", true),
-    options)
+  override def build(): Scan = new UdbfScan(options, required,
+    options.getInt("chunkFrames", UdbfDataSource.DefaultChunkFrames))
 }
 
 final case class UdbfInputPartition(file: String) extends InputPartition
 
-final class UdbfScan(resolve: () => Seq[String], required: StructType,
-    chunkFrames: Int, columnar: Boolean,
-    options: CaseInsensitiveStringMap)
+final class UdbfScan(options: CaseInsensitiveStringMap, required: StructType,
+    chunkFrames: Int)
     extends Scan with Batch {
-  private lazy val files: Seq[String] = resolve()
+  private lazy val files: Seq[String] = UdbfDataSource.resolveFiles(options)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
     files.map(UdbfInputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new UdbfReaderFactory(required, chunkFrames, columnar)
-  override def toMicroBatchStream(
-      checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new UdbfMicroBatchStream(
-      UdbfDataSource.rawPaths(options), required, chunkFrames,
-      checkpointLocation,
-      options.getInt("stableChecks", graft.core.GraftConfig.stableChecks),
-      options.getLong("minFileAgeMs", graft.core.GraftConfig.minFileAgeMs),
-      options.getInt("maxFilesPerTrigger", 0))
+    new UdbfReaderFactory(required, chunkFrames)
   override def description(): String =
     s"udbf [columns: ${required.fieldNames.mkString(",")}]"
 }
 
-final class UdbfReaderFactory(required: StructType, chunkFrames: Int,
-    columnar: Boolean)
+final class UdbfReaderFactory(required: StructType, chunkFrames: Int)
     extends PartitionReaderFactory {
-  // decoded vectors feed ColumnarToRow / whole-stage codegen directly;
-  // the `columnar=false` read option keeps the row path selectable (it
-  // is also the parity reference for the vectorized path's spec)
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar
+  // decoded vectors feed ColumnarToRow / whole-stage codegen directly,
+  // so Spark never asks this factory for the row reader
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new UdbfPartitionReader(
       partition.asInstanceOf[UdbfInputPartition].file, required.fieldNames, chunkFrames)
@@ -289,7 +265,8 @@ private[udbf] final class UdbfCursor(
   def rawBuffer: ByteBuffer = buf
 }
 
-/** Row-path reader (`columnar=false` or row-preferring contexts). */
+/** Row-path reader: one `GenericInternalRow` per frame. The parity
+  * reference the vectorized reader's spec decodes against. */
 final class UdbfPartitionReader(
     file: String, requiredCols: Array[String], chunkFrames: Int)
     extends PartitionReader[InternalRow] {

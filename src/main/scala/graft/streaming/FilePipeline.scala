@@ -20,7 +20,7 @@ import graft.sinks.KvSink
   *     backpressure (T9, Pipeline.py:60-66); checkpointing makes file
   *     tracking exactly-once across restarts (D1).
   *   - The per-batch `collect()` is control-plane only: it returns at
-  *     most `maxFilesPerTrigger` path strings, never data rows.
+  *     most one path string, never data rows.
   *   - Each file runs the supplied `process` (a Spark batch job); an
   *     exception is logged at WARN (file, exception class and message,
   *     throwable), dead-letters the file to `failedDir` and sets
@@ -36,16 +36,16 @@ final class FilePipeline(
     checkpointDir: String,
     kv: KvSink,
     process: String => Unit,
-    maxFilesPerTrigger: Int = 1,
     pathGlobFilter: String = "*",
     triggerInterval: String = // T1 (TICKER_INTERVAL_SEC)
-      s"${graft.core.GraftConfig.tickerIntervalSec} seconds",
-    healthTtlSeconds: Long = graft.core.GraftConfig.basicTtlSeconds) { // BASIC_REDIS_TTL
+      s"${graft.core.GraftConfig.tickerIntervalSec} seconds") {
 
   Files.createDirectories(Paths.get(finishedDir))
   Files.createDirectories(Paths.get(failedDir))
 
   private val healthKey = s"health:${name}_file_processing"
+  private val healthTtl = Some(graft.core.GraftConfig.basicTtlSeconds)
+  private val filesPerTrigger = 1 // T9
 
   private def toLocal(uri: String): Path =
     if (uri.startsWith("file:")) Paths.get(URI.create(uri)) else Paths.get(uri)
@@ -59,7 +59,7 @@ final class FilePipeline(
       process(p.toString)
       Files.move(p, Paths.get(finishedDir).resolve(p.getFileName),
         StandardCopyOption.REPLACE_EXISTING)
-      kv.set(healthKey, "0", Some(healthTtlSeconds))
+      kv.set(healthKey, "0", healthTtl)
       true
     } catch {
       case e: Exception =>
@@ -70,7 +70,7 @@ final class FilePipeline(
         try {
           Files.move(p, Paths.get(failedDir).resolve(p.getFileName),
             StandardCopyOption.REPLACE_EXISTING)
-          kv.set(healthKey, "1", Some(healthTtlSeconds))
+          kv.set(healthKey, "1", healthTtl)
         } catch {
           case _: Exception => () // move failure: leave out of requeue (Pipeline.py:203-204)
         }
@@ -78,11 +78,11 @@ final class FilePipeline(
     }
   }
 
-  // control-plane collect, contractually ≤ maxFilesPerTrigger path
+  // control-plane collect, contractually ≤ filesPerTrigger path
   // strings per micro-batch (the source's admission bound) — never data
   private[streaming] def handleBatch(batch: DataFrame, batchId: Long): Unit =
     graft.core.Bounded
-      .collect(batch.select("path"), maxFilesPerTrigger, "FilePipeline.batch")
+      .collect(batch.select("path"), filesPerTrigger, "FilePipeline.batch")
       .map(_.getString(0)).sorted.foreach(processOne)
 
   def start(): StreamingQuery =
@@ -100,7 +100,7 @@ final class FilePipeline(
         org.apache.spark.sql.types.StructField("content",
           org.apache.spark.sql.types.BinaryType))))
       .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", filesPerTrigger)
       .load(stagingDir)
       .select("path")
       .writeStream

@@ -25,7 +25,7 @@ object PartnerJoin {
     * filename timestamp (P7 — helper/utility.py:8-27). */
   def fileEvents(spark: SparkSession, dir: String,
       pathGlobFilter: String = "*"): DataFrame = {
-    val pattern = """(\d{4}-\d{2}-\d{2})_(\d{2}-\d{2}-\d{2})"""
+    val pattern = graft.functions.ReferenceFunctions.FilenameTsPattern
     spark.readStream
       .format("binaryFile")
       .schema(StructType(Seq(

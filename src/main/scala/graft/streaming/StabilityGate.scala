@@ -6,6 +6,7 @@ import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 import scala.util.matching.Regex
 
 /** T2 + T3 — file-stability admission gate with oldest-first ordering
@@ -13,7 +14,8 @@ import scala.util.matching.Regex
   *
   * A file is admitted only when BOTH hold (Pipeline.py:96-119):
   *   - its (size, mtime) stat has been observed identical on at least
-  *     `stableChecks` consecutive polls (any change resets the count);
+  *     `stableChecks` consecutive polls (any change resets the count,
+  *     and so does a poll that does not list the file);
   *   - its mtime is older than `minFileAgeMs` (files younger than the
   *     age gate still accumulate stability counts but are never
   *     admitted, exactly like the reference's early-return branch).
@@ -32,27 +34,20 @@ import scala.util.matching.Regex
 final class StabilityGate(
     inputDir: Path,
     stagingDir: Path,
-    timestampRe: Regex = StabilityGate.DefaultTimestampRe,
-    timestampFmt: String = StabilityGate.DefaultTimestampFmt,
     stableChecks: Int = graft.core.GraftConfig.stableChecks,
     minFileAgeMs: Long = graft.core.GraftConfig.minFileAgeMs,
     clock: () => Long = () => System.currentTimeMillis) {
 
   import StabilityGate.StatInfo
   private val seen = mutable.Map.empty[Path, StatInfo]
-  private val fmt = DateTimeFormatter.ofPattern(timestampFmt)
 
   Files.createDirectories(stagingDir)
 
   /** P7 — filename timestamp; falls back to mtime (utility.py:20-27). */
   private[streaming] def extractTs(p: Path): Option[Long] =
-    timestampRe.findFirstMatchIn(p.getFileName.toString) match {
-      case Some(m) if m.groupCount >= 2 =>
-        scala.util.Try(LocalDateTime.parse(s"${m.group(1)} ${m.group(2)}", fmt)
-          .toInstant(ZoneOffset.UTC).toEpochMilli).toOption
-      case _ =>
-        scala.util.Try(Files.getLastModifiedTime(p).toMillis).toOption
-    }
+    StabilityGate.filenameTs(p.getFileName.toString)
+      .map(_.toInstant(ZoneOffset.UTC).toEpochMilli)
+      .orElse(scala.util.Try(Files.getLastModifiedTime(p).toMillis).toOption)
 
   private def isStable(p: Path): Boolean = {
     val st = try {
@@ -80,8 +75,12 @@ final class StabilityGate(
   def poll(): Option[Path] = {
     val files =
       if (Files.isDirectory(inputDir))
-        Files.list(inputDir).iterator().asScala.filter(Files.isRegularFile(_)).toVector
+        Using.resource(Files.list(inputDir))(
+          _.iterator().asScala.filter(Files.isRegularFile(_)).toVector)
       else Vector.empty
+    // a file that left the directory unadmitted starts over if it returns
+    val listed = files.toSet
+    seen.filterInPlace { case (p, _) => listed(p) }
     val candidates = files.flatMap { p =>
       extractTs(p) match {
         case Some(ts) if isStable(p) => Some((ts, p))
@@ -105,8 +104,16 @@ final class StabilityGate(
 
 object StabilityGate {
   /** The LPI/SENS/MIST filename patterns (conv/main_lpi.py:15-16 et al). */
-  val DefaultTimestampRe: Regex = """(\d{4}-\d{2}-\d{2})_(\d{2}-\d{2}-\d{2})""".r
-  val DefaultTimestampFmt = "yyyy-MM-dd HH-mm-ss"
+  private val TimestampRe: Regex = graft.functions.ReferenceFunctions.FilenameTsPattern.r
+  private val TimestampFmt: DateTimeFormatter = DateTimeFormatter.ofPattern("yyyy-MM-dd HH-mm-ss")
+
+  /** P7 — the `YYYY-MM-DD_HH-MM-SS` timestamp embedded in a file name
+    * (two regex groups joined by a space, utility.py:8-27); None when
+    * the name carries none or it does not parse. */
+  def filenameTs(name: String): Option[LocalDateTime] =
+    TimestampRe.findFirstMatchIn(name).flatMap { m =>
+      scala.util.Try(LocalDateTime.parse(s"${m.group(1)} ${m.group(2)}", TimestampFmt)).toOption
+    }
 
   private[streaming] final case class StatInfo(
       size: Long, mtime: Long, var stableCount: Int)

@@ -164,14 +164,24 @@ class UdbfSpec extends SparkSpec {
     // 10000 frames > the 4096-row vector capacity → several ColumnarBatches
     UdbfWriter.write(p, chans, 10000, gen, 1700000000000000L, 100.0)
     val colDf = spark.read.format("udbf").load(p.toString)
-    val rowDf = spark.read.format("udbf")
-      .option("columnar", "false").load(p.toString)
-    // the default path is really vectorized, the opt-out really is not
+    // the DataFrame path is really vectorized
     assert(colDf.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-    assert(!rowDf.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-    assert(colDf.count() == 10000 && rowDf.count() == 10000)
-    // bit-exact parity, every column of every frame, both directions
-    assert(colDf.exceptAll(rowDf).isEmpty && rowDf.exceptAll(colDf).isEmpty)
+    val colRows = colDf.select(unix_micros(col("ts")) +: chans.map(c => col(c.name)): _*)
+      .collect()
+    // the row path, decoded directly by the row reader
+    val reader = new UdbfPartitionReader(p.toString, colDf.columns,
+      UdbfDataSource.DefaultChunkFrames)
+    val rowRows = Iterator.continually(reader.next()).takeWhile(identity)
+      .map(_ => reader.get().copy()).toVector
+    reader.close()
+    assert(colRows.length == 10000 && rowRows.length == 10000)
+    // bit-exact parity, every column of every frame, in frame order
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    val mismatched = colRows.zip(rowRows).indexWhere { case (c, r) =>
+      c.getLong(0) != r.getLong(0) ||
+        (1 to chans.size).exists(k => bits(c.getDouble(k)) != bits(r.getDouble(k)))
+    }
+    assert(mismatched == -1, s"frame $mismatched differs between the two paths")
     // pruning holds on the vectorized path: a 2-column projection reads
     // a 2-column batch
     val pruned = colDf.select("ts", "w_07")

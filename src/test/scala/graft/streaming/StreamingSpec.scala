@@ -1,6 +1,11 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
@@ -9,7 +14,7 @@ import org.apache.logging.log4j.core.config.Property
 
 import graft.SparkSpec
 import graft.apps.{LpiAnalysis, SensAnalysis}
-import graft.sinks.InMemoryKvSink
+import graft.sinks.{InMemoryKvSink, JsonDocStore, UploadSink}
 import graft.sources.udbf.UdbfWriter
 import graft.sources.udbf.UdbfWriter.ChannelSpec
 
@@ -20,9 +25,11 @@ class StreamingSpec extends SparkSpec {
   private def tmp(prefix: String): Path = Files.createTempDirectory(prefix)
 
   /** Gate with a controllable clock, starting at the real now. */
-  private def gateWith(input: Path, staging: Path): (StabilityGate, () => Unit) = {
+  private def gateWith(input: Path, staging: Path,
+      stableChecks: Int = graft.core.GraftConfig.stableChecks)
+      : (StabilityGate, () => Unit) = {
     var offset = 0L
-    val gate = new StabilityGate(input, staging,
+    val gate = new StabilityGate(input, staging, stableChecks = stableChecks,
       clock = () => System.currentTimeMillis + offset)
     (gate, () => offset += 41000L)
   }
@@ -58,6 +65,42 @@ class StreamingSpec extends SparkSpec {
     offset += 41000L
     assert(gate.poll().isEmpty) // fresh stat observed once
     assert(gate.poll().isDefined) // second identical observation: admitted
+  }
+
+  test("T2: a file that vanished between polls starts its stability count over") {
+    val input = tmp("gate_in5"); val staging = tmp("gate_stage5")
+    val (gate, age) = gateWith(input, staging, stableChecks = 2)
+    val f = input.resolve("v_100hz_2024-03-15_12-00-00.dat")
+    Files.write(f, Array[Byte](1, 2, 3))
+    val mtime = Files.getLastModifiedTime(f)
+    age()
+    assert(gate.poll().isEmpty) // count 1 < 2
+    Files.delete(f)
+    assert(gate.poll().isEmpty) // not listed: its count is forgotten
+    // the same bytes and mtime come back: a fresh observation, count 1
+    Files.write(f, Array[Byte](1, 2, 3))
+    Files.setLastModifiedTime(f, mtime)
+    assert(gate.poll().isEmpty)
+    assert(gate.poll().contains(staging.resolve(f.getFileName)))
+  }
+
+  test("gate polls, upload sweeps and doc-store reads close their directory listings") {
+    val fdDir = Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fdDir), "needs /proc/self/fd to count open descriptors")
+    def openFds(): Long = Using.resource(Files.list(fdDir))(_.count())
+    val input = tmp("fd_in"); val staging = tmp("fd_stage")
+    val finished = tmp("fd_fin"); val remote = tmp("fd_remote")
+    Files.write(input.resolve("young_2024-03-15_12-00-00.dat"), Array[Byte](1))
+    Files.write(finished.resolve("done.dat"), Array[Byte](1))
+    val gate = new StabilityGate(input, staging) // never ages: nothing admitted
+    val sink = new UploadSink(finished, new UploadSink.LocalDirStore(remote),
+      settle = () => ())
+    val docs = new JsonDocStore(tmp("fd_docs")) // no latest.json: both list
+    val before = openFds()
+    (1 to 300).foreach { _ => gate.poll(); sink.sweep(); docs.ids(); docs.latest() }
+    System.gc()
+    val leaked = openFds() - before
+    assert(leaked < 50, s"$leaked descriptors left open by 300 rounds of listings")
   }
 
   test("T3: stable candidates are admitted oldest-filename-timestamp first") {
@@ -155,22 +198,30 @@ class StreamingSpec extends SparkSpec {
     val trimmedName = "fhe_100hz_2024-03-15_12-05-27.dat"
     UdbfWriter.write(input.resolve(trimmedName), Seq(ChannelSpec("ch_a", "V")), 500,
       (i, _) => i.toDouble, 1710504327000000L, 100.0)
+    // a cut file with no frames at all: no min(ts) to trim from
+    val emptyName = "fhe_100hz_2024-03-15_12-07-27.dat"
+    UdbfWriter.write(input.resolve(emptyName), Seq(ChannelSpec("ch_a", "V")), 0,
+      (i, _) => i.toDouble, 1710504447000000L, 100.0)
 
     val alignedBytes = Files.size(input.resolve(alignedName))
     val kv = new InMemoryKvSink()
     val analysis = new LpiAnalysis(spark, stats.toString, kv,
       refSizesKb = Map("100hz" -> alignedBytes / 1000.0))
 
-    // T2/T3: admit all four (aged clock), oldest first
+    // T2/T3: admit all five (aged clock), oldest first
     var offset = 0L
     val gate = new StabilityGate(input, staging,
       clock = () => System.currentTimeMillis + offset)
     gate.poll(); offset += 41000L
-    assert(gate.pollAll().size == 4)
+    assert(gate.pollAll().size == 5)
 
+    val processed = mutable.ArrayBuffer.empty[String]
     val pipeline = new FilePipeline(spark, "lpi_100hz", staging.toString,
       finished.toString, failed.toString, ckpt.toString, kv,
-      process = analysis.processFile, pathGlobFilter = "*.dat")
+      process = { p =>
+        processed.synchronized(processed += Paths.get(p).getFileName.toString)
+        analysis.processFile(p)
+      }, pathGlobFilter = "*.dat")
     val query = pipeline.start()
     try query.processAllAvailable() finally query.stop()
 
@@ -179,6 +230,7 @@ class StreamingSpec extends SparkSpec {
     assert(Files.exists(finished.resolve(cutName)))
     assert(Files.exists(failed.resolve("corrupt_100hz_2024-03-15_12-10-00.dat")))
     assert(Files.exists(finished.resolve(trimmedName)))
+    assert(Files.exists(finished.resolve(emptyName)))
     // health flag set by the last processed file (batch order among
     // same-mtime files is not deterministic; per-file semantics are
     // covered by the T7 test)
@@ -205,6 +257,10 @@ class StreamingSpec extends SparkSpec {
     assert(Files.readString(stats.resolve("fhe_100hz_2024-03-15_12-05-27_stats.csv")) ==
       "Sensor,Mean,Minimum,Maximum\n")
     assert(!kv.scan("stats:*").contains("stats:fhe_100hz_2024-03-15_12-05-27"))
+    // the zero-frame cut file ends the same way
+    assert(Files.readString(stats.resolve("fhe_100hz_2024-03-15_12-07-27_stats.csv")) ==
+      "Sensor,Mean,Minimum,Maximum\n")
+    assert(!kv.scan("stats:*").contains("stats:fhe_100hz_2024-03-15_12-07-27"))
 
     // K3: stats hash with TTL, F3 size health was written. The VALUE is
     // last-processed-file state: the corrupt file's aligned name gets a
@@ -218,13 +274,24 @@ class StreamingSpec extends SparkSpec {
     assert(Set("0", "1").contains(
       kv.get("health:lpi_100hz_file_size").getOrElse("missing")))
 
-    // D1: a restart from the same checkpoint must not reprocess
-    val csvMtime = Files.getLastModifiedTime(
-      stats.resolve("fhe_100hz_2024-03-15_12-00-00_stats.csv"))
+    // D1: a restart from the same checkpoint processes only the file
+    // staged while the query was down, once, and none of the earlier ones
+    val csvMtimes: Map[Path, FileTime] = Using.resource(Files.list(stats))(
+      _.iterator().asScala.map(p => p -> Files.getLastModifiedTime(p)).toMap)
+    assert(csvMtimes.size == 4)
+    val lateName = "fhe_100hz_2024-03-15_12-20-00.dat"
+    UdbfWriter.write(input.resolve(lateName), chans, 6000, vals,
+      1710505200000000L, 100.0)
+    gate.poll()
+    assert(gate.pollAll() == Seq(staging.resolve(lateName)))
     val query2 = pipeline.start()
     try query2.processAllAvailable() finally query2.stop()
-    assert(Files.getLastModifiedTime(
-      stats.resolve("fhe_100hz_2024-03-15_12-00-00_stats.csv")) == csvMtime)
+    assert(processed.count(_ == lateName) == 1)
+    assert(processed.groupBy(identity).values.forall(_.size == 1), processed)
+    assert(processed.size == 6)
+    assert(Files.exists(finished.resolve(lateName)))
+    assert(kv.hgetAll("stats:fhe_100hz_2024-03-15_12-20-00")("ch_a:mean") == "4.5")
+    csvMtimes.foreach { case (p, t) => assert(Files.getLastModifiedTime(p) == t, p) }
   }
 
   test("E2E: the SENS flow runs under the same streaming driver") {
