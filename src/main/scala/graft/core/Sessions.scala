@@ -55,7 +55,25 @@ object Sessions {
 
   /** Local harness builder: engine defaults + local-mode sizing.
     * (nanosAsLong: the corpus' events.ts is parquet TIMESTAMP(NANOS),
-    * read as Long and converted by Tables.events.) */
+    * read as Long and converted by Tables.events.)
+    *
+    * Streaming checkpoints go through Spark's `FileSystemBasedCheckpointFileManager`.
+    * The default FileContext manager sets the file permission on every
+    * create, and without Hadoop's native library the local file system
+    * does that by starting a `chmod` process. Each micro-batch creates
+    * three checkpoint files (`sources/0/<n>`, `offsets/<n>`,
+    * `commits/<n>`), so the default costs three process starts per
+    * logger file. `FileSystem.create` sets no permission. On a local
+    * disk both managers write a temp file and rename it after an
+    * existence check, refuse a non-overwriting create onto an existing
+    * file, and skip fsync. One difference: an overwriting create, which
+    * Spark's contract calls best effort and which only state stores
+    * issue when a batch is replayed, keeps the existing file, because
+    * `FileSystem.rename` refuses an existing destination. A replayed
+    * batch reads the logged offsets and writes the same state, so the
+    * kept file holds it too. Cluster builders keep the default: HDFS's
+    * FileContext rename is atomic. A session built elsewhere runs the
+    * same, on the slower default. */
   def builder(appName: String): SparkSession.Builder =
     withEngineDefaults(SparkSession
       .builder()
@@ -64,6 +82,8 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()

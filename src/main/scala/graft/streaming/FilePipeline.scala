@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.net.URI
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{DirectoryNotEmptyException, Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -16,16 +16,25 @@ import graft.sinks.KvSink
   *
   *   - Source: `binaryFile` stream projected to `path` only (the binary
   *     content column is pruned away, so listing — not reading — is the
-  *     cost). `maxFilesPerTrigger=1` reproduces the single-worker
-  *     backpressure (T9, Pipeline.py:60-66); checkpointing makes file
-  *     tracking exactly-once across restarts (D1).
+  *     cost), read with `recursiveFileLookup` because the gate stages
+  *     each admitted file in its own directory, `staging/<uuid>/<name>`.
+  *     `maxFilesPerTrigger=1` reproduces the single-worker backpressure
+  *     (T9, Pipeline.py:60-66).
+  *   - D1: the checkpoint makes file tracking exactly-once across
+  *     restarts, and the unique admission path lets a file re-delivered
+  *     under a name already processed run again (the stream source
+  *     remembers every path it has seen), as the reference's
+  *     remove-on-success set does (Pipeline.py:205-208).
   *   - The per-batch `collect()` is control-plane only: it returns at
   *     most one path string, never data rows.
   *   - Each file runs the supplied `process` (a Spark batch job); an
   *     exception is logged at WARN (file, exception class and message,
-  *     throwable), dead-letters the file to `failedDir` and sets
-  *     `health:<name>_file_processing=1` (TTL 60), success archives to
-  *     `finishedDir` and sets 0 (Pipeline.py:193-204).
+  *     throwable) and dead-letters the file to `failedDir`; a failed
+  *     dead-letter move is a second WARN with its own throwable. After
+  *     the move attempt, whatever its outcome,
+  *     `health:<name>_file_processing` is set to 1 (TTL 60). Success
+  *     archives to `finishedDir` and sets 0 (Pipeline.py:193-204).
+  *     Either way the emptied admission directory is removed.
   */
 final class FilePipeline(
     spark: SparkSession,
@@ -47,6 +56,9 @@ final class FilePipeline(
   private val healthTtl = Some(graft.core.GraftConfig.basicTtlSeconds)
   private val filesPerTrigger = 1 // T9
 
+  private val stagingRoot = Paths.get(stagingDir).toAbsolutePath.normalize
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private def toLocal(uri: String): Path =
     if (uri.startsWith("file:")) Paths.get(URI.create(uri)) else Paths.get(uri)
 
@@ -55,7 +67,7 @@ final class FilePipeline(
     * dead-letter semantics. */
   def processOne(pathUri: String): Boolean = {
     val p = toLocal(pathUri)
-    try {
+    val ok = try {
       process(p.toString)
       Files.move(p, Paths.get(finishedDir).resolve(p.getFileName),
         StandardCopyOption.REPLACE_EXISTING)
@@ -64,18 +76,34 @@ final class FilePipeline(
     } catch {
       case e: Exception =>
         // K8: the dead-letter cause, one WARN line with the throwable
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"[graft] FilePipeline $name: dead-lettering $p: " +
-            s"${e.getClass.getName}: ${e.getMessage}", e)
+        log.warn(s"[graft] FilePipeline $name: dead-lettering $p: " +
+          s"${e.getClass.getName}: ${e.getMessage}", e)
         try {
           Files.move(p, Paths.get(failedDir).resolve(p.getFileName),
             StandardCopyOption.REPLACE_EXISTING)
-          kv.set(healthKey, "1", healthTtl)
         } catch {
-          case _: Exception => () // move failure: leave out of requeue (Pipeline.py:203-204)
+          // the file stays out of requeue (Pipeline.py:203-204), loudly
+          case m: Exception =>
+            log.warn(s"[graft] FilePipeline $name: cannot dead-letter $p: " +
+              s"${m.getClass.getName}: ${m.getMessage}", m)
         }
+        // set whether or not the move worked; after it, so a reader that
+        // sees the flag finds a dead-lettered file already in failedDir
+        kv.set(healthKey, "1", healthTtl)
         false
     }
+    removeAdmissionDir(p)
+    ok
+  }
+
+  /** Deletes the gate's `staging/<uuid>` directory once its file has
+    * left; a file staged directly in the staging root leaves no
+    * directory to remove. */
+  private def removeAdmissionDir(file: Path): Unit = {
+    val dir = file.toAbsolutePath.normalize.getParent
+    if (dir != stagingRoot)
+      try Files.deleteIfExists(dir)
+      catch { case _: DirectoryNotEmptyException => () } // its file is still there
   }
 
   // control-plane collect, contractually ≤ filesPerTrigger path
@@ -100,6 +128,7 @@ final class FilePipeline(
         org.apache.spark.sql.types.StructField("content",
           org.apache.spark.sql.types.BinaryType))))
       .option("pathGlobFilter", pathGlobFilter)
+      .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", filesPerTrigger)
       .load(stagingDir)
       .select("path")

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import java.time.LocalDateTime
 import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
+import java.util.UUID
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -28,8 +29,13 @@ import scala.util.matching.Regex
   * Spark has no built-in for this (SURVEY.md §7.4): the gate runs as a
   * staging janitor that MOVES admitted files into the directory a
   * Structured Streaming file source watches — admission order becomes
-  * arrival order for the stream. `clock` is injectable so the age gate
-  * is testable without sleeping.
+  * arrival order for the stream. Each admitted file gets a fresh
+  * directory, `staging/<uuid>/<name>`: the stream source remembers every
+  * path it has seen, so a unique path is what lets a file re-delivered
+  * under an already-processed name be processed again, and a staged
+  * file is never overwritten before it is processed. The file name
+  * (and so the archive name) and its mtime are unchanged. `clock` is
+  * injectable so the age gate is testable without sleeping.
   */
 final class StabilityGate(
     inputDir: Path,
@@ -70,8 +76,8 @@ final class StabilityGate(
     }
   }
 
-  /** One scan: admit (move to staging) the oldest stable candidate, if
-    * any. Returns the staged path. */
+  /** One scan: admit (move to its own directory under staging) the
+    * oldest stable candidate, if any. Returns the staged path. */
   def poll(): Option[Path] = {
     val files =
       if (Files.isDirectory(inputDir))
@@ -89,8 +95,10 @@ final class StabilityGate(
     }
     candidates.sortBy { case (ts, p) => (ts, p.toString) }.headOption.map {
       case (_, p) =>
-        val dest = stagingDir.resolve(p.getFileName)
-        Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
+        val dir = Files.createDirectory(stagingDir.resolve(UUID.randomUUID.toString))
+        val dest = dir.resolve(p.getFileName)
+        try Files.move(p, dest)
+        catch { case e: java.io.IOException => Files.delete(dir); throw e }
         seen.remove(p)
         dest
     }

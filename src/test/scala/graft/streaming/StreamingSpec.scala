@@ -34,6 +34,10 @@ class StreamingSpec extends SparkSpec {
     (gate, () => offset += 41000L)
   }
 
+  /** A gate admission: the file keeps its name, somewhere under staging. */
+  private def stagedAs(staged: Path, staging: Path, name: String): Boolean =
+    staged.getFileName.toString == name && staged.startsWith(staging)
+
   test("T2: an in-flight file is refused until stable and aged") {
     val input = tmp("gate_in"); val staging = tmp("gate_stage")
     val (gate, age) = gateWith(input, staging)
@@ -45,7 +49,7 @@ class StreamingSpec extends SparkSpec {
     assert(gate.poll().isEmpty)
     // age passes: enough consecutive identical stats were seen
     age()
-    assert(gate.poll().contains(staging.resolve(f.getFileName)))
+    assert(gate.poll().exists(stagedAs(_, staging, f.getFileName.toString)))
     assert(!Files.exists(f))
   }
 
@@ -81,7 +85,7 @@ class StreamingSpec extends SparkSpec {
     Files.write(f, Array[Byte](1, 2, 3))
     Files.setLastModifiedTime(f, mtime)
     assert(gate.poll().isEmpty)
-    assert(gate.poll().contains(staging.resolve(f.getFileName)))
+    assert(gate.poll().exists(stagedAs(_, staging, f.getFileName.toString)))
   }
 
   test("gate polls, upload sweeps and doc-store reads close their directory listings") {
@@ -135,9 +139,14 @@ class StreamingSpec extends SparkSpec {
     val kv = new InMemoryKvSink()
     val pipeline = new FilePipeline(spark, "t7", staging.toString,
       finished.toString, failed.toString, ckpt.toString, kv,
-      process = p => require(!p.contains("bad"), "boom"))
+      process = { p =>
+        // a process that removes its own input leaves nothing to dead-letter
+        if (p.contains("gone")) { Files.delete(Paths.get(p)); sys.error("gone too soon") }
+        require(!p.contains("bad"), "boom")
+      })
     val good = staging.resolve("good.dat"); val bad = staging.resolve("bad.dat")
-    Files.write(good, Array[Byte](1)); Files.write(bad, Array[Byte](2))
+    val gone = staging.resolve("gone.dat")
+    Seq(good, bad, gone).foreach(Files.write(_, Array[Byte](1)))
     // K8: capture what FilePipeline logs, next to its configured appenders
     val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]
     val appender = new AbstractAppender("t7-capture", null, null, true,
@@ -154,22 +163,35 @@ class StreamingSpec extends SparkSpec {
       assert(Files.exists(finished.resolve("good.dat")))
       assert(events.isEmpty, "a processed file logs no dead-letter event")
       assert(!pipeline.processOne(bad.toString))
+      assert(kv.get("health:t7_file_processing").contains("1"))
+      assert(Files.exists(failed.resolve("bad.dat")))
+      assert(!Files.exists(bad))
+      // the dead-letter cause: one WARN naming file, exception and message
+      assert(events.size == 1)
+      val e = events.poll()
+      assert(e.getLevel == Level.WARN)
+      val msg = e.getMessage.getFormattedMessage
+      assert(msg.contains(bad.toString), msg)
+      assert(msg.contains("java.lang.IllegalArgumentException: requirement failed: boom"), msg)
+      assert(e.getThrown.isInstanceOf[IllegalArgumentException])
+      assert(e.getThrown.getMessage == "requirement failed: boom")
+
+      // a failed dead-letter move still flags health, and is a second WARN
+      Files.write(good, Array[Byte](1))
+      assert(pipeline.processOne(good.toString))
+      assert(kv.get("health:t7_file_processing").contains("0"))
+      assert(!pipeline.processOne(gone.toString))
+      assert(kv.get("health:t7_file_processing").contains("1"))
+      val Seq(cause, move) = events.asScala.toSeq
+      assert(cause.getLevel == Level.WARN && move.getLevel == Level.WARN)
+      assert(cause.getMessage.getFormattedMessage.contains("gone too soon"))
+      val moveMsg = move.getMessage.getFormattedMessage
+      assert(moveMsg.contains(s"cannot dead-letter $gone"), moveMsg)
+      assert(move.getThrown.isInstanceOf[java.nio.file.NoSuchFileException])
     } finally {
       logger.removeAppender(appender)
       appender.stop()
     }
-    assert(kv.get("health:t7_file_processing").contains("1"))
-    assert(Files.exists(failed.resolve("bad.dat")))
-    assert(!Files.exists(bad))
-    // the dead-letter cause: one WARN naming file, exception and message
-    assert(events.size == 1)
-    val e = events.peek()
-    assert(e.getLevel == Level.WARN)
-    val msg = e.getMessage.getFormattedMessage
-    assert(msg.contains(bad.toString), msg)
-    assert(msg.contains("java.lang.IllegalArgumentException: requirement failed: boom"), msg)
-    assert(e.getThrown.isInstanceOf[IllegalArgumentException])
-    assert(e.getThrown.getMessage == "requirement failed: boom")
   }
 
   test("E2E: gate → stream → udbf decode → stats CSV + KV → archive; corrupt file dead-letters") {
@@ -283,7 +305,8 @@ class StreamingSpec extends SparkSpec {
     UdbfWriter.write(input.resolve(lateName), chans, 6000, vals,
       1710505200000000L, 100.0)
     gate.poll()
-    assert(gate.pollAll() == Seq(staging.resolve(lateName)))
+    val late = gate.pollAll()
+    assert(late.size == 1 && stagedAs(late.head, staging, lateName), late)
     val query2 = pipeline.start()
     try query2.processAllAvailable() finally query2.stop()
     assert(processed.count(_ == lateName) == 1)
@@ -292,6 +315,54 @@ class StreamingSpec extends SparkSpec {
     assert(Files.exists(finished.resolve(lateName)))
     assert(kv.hgetAll("stats:fhe_100hz_2024-03-15_12-20-00")("ch_a:mean") == "4.5")
     csvMtimes.foreach { case (p, t) => assert(Files.getLastModifiedTime(p) == t, p) }
+  }
+
+  test("D1: a file re-delivered under a processed name runs again; staging ends empty") {
+    val input = tmp("redo_in"); val staging = tmp("redo_stage")
+    val finished = tmp("redo_fin"); val failed = tmp("redo_fail")
+    val (gate, age) = gateWith(input, staging, stableChecks = 1)
+    val name = "a_2024-03-15_12-00-00.dat"
+    val seen = mutable.ArrayBuffer.empty[String]
+    val pipeline = new FilePipeline(spark, "redo", staging.toString,
+      finished.toString, failed.toString, tmp("redo_ckpt").toString, new InMemoryKvSink(),
+      process = p => seen.synchronized(seen += Files.readString(Paths.get(p))))
+    // stage, run, stop; the second delivery restarts from the checkpoint
+    def deliver(content: String): Unit = {
+      Files.writeString(input.resolve(name), content)
+      age()
+      assert(gate.pollAll().size == 1)
+      val q = pipeline.start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    deliver("first")
+    deliver("second")
+    assert(seen == Seq("first", "second"))
+    assert(Files.readString(finished.resolve(name)) == "second")
+    assert(Using.resource(Files.list(staging))(_.iterator().asScala.toList).isEmpty)
+  }
+
+  test("D1: the session writes checkpoints through FileSystem; an existing file is never replaced") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{
+      CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    val dir = tmp("ckpt_fm")
+    val fm = CheckpointFileManager.create(new HPath(dir.toUri),
+      spark.sessionState.newHadoopConf())
+    assert(fm.isInstanceOf[FileSystemBasedCheckpointFileManager], fm.getClass.getName)
+    val file = dir.resolve("0")
+    def write(text: String, overwrite: Boolean): Unit = {
+      val out = fm.createAtomic(new HPath(file.toUri), overwriteIfPossible = overwrite)
+      out.write(text.getBytes)
+      out.close()
+    }
+    write("first", overwrite = false)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](write("second", overwrite = false))
+    assert(Files.readString(file) == "first")
+    // overwriting is best effort in Spark's contract: it must not throw.
+    // Hadoop's FileSystem.rename refuses an existing destination, so this
+    // manager keeps the first file where the FileContext one replaced it
+    write("third", overwrite = true)
+    assert(Files.readString(file) == "first")
   }
 
   test("E2E: the SENS flow runs under the same streaming driver") {
