@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Tables
 import graft.operators.ChannelStats
 import graft.queries.{LlmQueries, MultimodalQueries, QueryDef, ReferenceQueries, RelationalQueries, SensicalQueries, UdbfQueries, WebhookQueries}
 
@@ -17,7 +18,7 @@ object SparkEntry {
     * (SURVEY.md §7.3, udbf_file_analysis.py:24-91). */
   def entry(spark: SparkSession): DataFrame =
     ChannelStats(
-      spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet"),
+      Tables.lineitem(spark, "/root/testdata/sf0.001"),
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
 
   /** One entry per implemented operator from SURVEY.md §2. */

@@ -1,6 +1,9 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** SparkSession factory for the graft engine.
   *
@@ -57,7 +60,9 @@ object Sessions {
     * (nanosAsLong: the corpus' events.ts is parquet TIMESTAMP(NANOS),
     * read as Long and converted by Tables.events.)
     *
-    * Streaming checkpoints go through Spark's `FileSystemBasedCheckpointFileManager`.
+    * Streaming checkpoints go through [[LocalCheckpointFileManager]],
+    * Spark's `FileSystemBasedCheckpointFileManager` that also deletes the
+    * temp file of a refused rename.
     * The default FileContext manager sets the file permission on every
     * create, and without Hadoop's native library the local file system
     * does that by starting a `chmod` process. Each micro-batch creates
@@ -83,11 +88,27 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+        classOf[LocalCheckpointFileManager].getName)
 
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+}
+
+/** Spark's `FileSystemBasedCheckpointFileManager` (see [[Sessions.builder]])
+  * that never leaves a temp file behind. `createAtomic` writes
+  * `.<name>.<uuid>.tmp` (and its `.crc`) and renames it on close. When
+  * the rename is refused because the destination exists, Spark's manager
+  * throws for a non-overwriting create and returns quietly for an
+  * overwriting one, and in both cases leaves the temp file in the
+  * checkpoint directory. Here it is deleted, with its `.crc`, whatever
+  * the outcome; the outcome itself is unchanged. */
+final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
+    extends FileSystemBasedCheckpointFileManager(path, hadoopConf) {
+  override def renameTempFile(srcPath: Path, dstPath: Path,
+      overwriteIfPossible: Boolean): Unit =
+    try super.renameTempFile(srcPath, dstPath, overwriteIfPossible)
+    finally fs.delete(srcPath, false)
 }

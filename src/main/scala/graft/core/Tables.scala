@@ -1,21 +1,77 @@
 package graft.core
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish corpus (TESTDATA.md).
   *
-  * One parquet file per table under `sfDir`. All reads go through here so
-  * every query benefits from the same scan configuration; Catalyst pushes
+  * One parquet file (or a directory of part files, as ScaleGen writes)
+  * per table under `sfDir`. All engine reads go through here so every
+  * query benefits from the same scan configuration; Catalyst pushes
   * filters/column pruning into these scans automatically.
+  *
+  * Each table's schema is inferred once per session and file version.
+  * `spark.read.parquet` without a schema starts a Spark job that reads
+  * the footers every time a DataFrame is built; a sub-second query pays
+  * that job once per table it reads. [[apply]] instead keeps the
+  * inferred `StructType` per (session, qualified path) and builds every
+  * later DataFrame with `spark.read.schema(cached).parquet(path)`, which
+  * starts no job. The entry carries the version it was inferred for: the
+  * length and modification time of every leaf file under the path, and
+  * the session's values of the confs that shape parquet inference
+  * (`InferenceConfs`). A rewritten, added or removed file, or a changed
+  * conf, re-infers, so `normalizeTs`/`conform` always see the current
+  * encoding. Entries of stopped sessions are evicted on every lookup, as
+  * `LlmQueries`' shared-corpus cache does. A missing path is not cached:
+  * inference fails with Spark's usual error.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** The confs whose values change what parquet inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  private type Version = (Seq[(String, Long, Long)], Seq[Option[String]])
+  private val schemas = TrieMap.empty[(SparkSession, String), (Version, StructType)]
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    schemas.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val key = (spark, fs.makeQualified(p).toString)
+    val version = (leafFiles(fs, p), InferenceConfs.map(spark.conf.getOption))
+    schemas.get(key) match {
+      case Some((v, schema)) if v == version => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        schemas.put(key, (version, schema))
+        schema
+    }
+  }
+
+  /** (path, length, mtime) of every file under `p`; `p` itself if it is a
+    * file, nothing if it does not exist. */
+  private def leafFiles(fs: FileSystem, p: Path): Seq[(String, Long, Long)] =
+    try fs.listStatus(p).toSeq.flatMap { st =>
+      if (st.isDirectory) leafFiles(fs, st.getPath)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    } catch { case _: java.io.FileNotFoundException => Nil }
 
   /** Gated scan widening — the input-skew remedy (optimization guide
     * §2.5: "one huge unsplittable file … repartition immediately after

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -249,7 +250,7 @@ object Multimodal {
     * UTF-8 bytes of the text, kind routed by id. Gives every operator
     * above a reproducible input at any SF. */
   def syntheticMedia(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.documents(spark, sfDir)
       .select(col("doc_id").as("media_id"),
         when(col("doc_id") % 3 === 0, "image")
           .when(col("doc_id") % 3 === 1, "audio")

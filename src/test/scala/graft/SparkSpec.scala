@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,4 +28,18 @@ abstract class SparkSpec extends AnyFunSuite {
   /** `import testImplicits._` for .toDF/.toDS in suites. */
   protected lazy val testImplicits: org.apache.spark.sql.SQLImplicits =
     spark.implicits
+
+  /** Spark jobs started while `body` runs, counted once the listener bus
+    * has delivered every event. */
+  protected def jobsRunBy(body: => Unit): Int = {
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    started.get
+  }
 }

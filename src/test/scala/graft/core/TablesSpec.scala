@@ -104,4 +104,56 @@ class TablesSpec extends SparkSpec {
     assert(ev.groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .count().count() == 2)
   }
+
+  test("a table's schema is inferred once per session: a second read runs no Spark job") {
+    val dir = tmpSfDir()
+    Seq((1L, "a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    assert(jobsRunBy(Tables(spark, dir, "documents")) > 0, "the first read infers")
+    assert(jobsRunBy(Tables(spark, dir, "documents")) == 0)
+    assert(Tables(spark, dir, "documents").as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
+  test("a table rewritten with another schema in the same session is re-inferred") {
+    val dir = tmpSfDir()
+    val path = s"$dir/documents.parquet"
+    Seq((1, "a")).toDF("doc_id", "text").write.parquet(path)
+    assert(Tables(spark, dir, "documents").schema("doc_id").dataType == IntegerType)
+    Seq((2L, "b", 1L)).toDF("doc_id", "text", "n_chars")
+      .write.mode("overwrite").parquet(path)
+    val df = Tables(spark, dir, "documents")
+    assert(df.schema("doc_id").dataType == LongType)
+    assert(df.columns.toSeq == Seq("doc_id", "text", "n_chars"))
+    assert(df.as[(Long, String, Long)].collect().toSeq == Seq((2L, "b", 1L)))
+  }
+
+  test("a changed inference conf is re-inferred: inferTimestampNTZ flips the raw ts type") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmpSfDir()
+    // naive micros written as pyarrow writes them: Spark's own writer also
+    // stores its schema in the footer, and inference prefers that to the conf
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(MICROS,false)); }")
+    val out = HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"),
+      spark.sessionState.newHadoopConf())
+    val writer = ExampleParquetWriter.builder(out).withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1709294400000000L)) // 2024-03-01T12:00
+    finally writer.close()
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val was = spark.conf.get(key)
+    def rawTs = Tables(spark, dir, "events").schema("ts").dataType
+    try {
+      spark.conf.set(key, "true")
+      assert(rawTs == TimestampNTZType)
+      spark.conf.set(key, "false")
+      assert(rawTs == TimestampType)
+      assert(Tables.events(spark, dir).select(expr("unix_micros(ts)")).as[Long].head()
+        == 1709294400000000L)
+      spark.conf.set(key, "true")
+      assert(rawTs == TimestampNTZType)
+    } finally spark.conf.set(key, was)
+  }
 }

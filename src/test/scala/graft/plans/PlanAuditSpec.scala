@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.operators.{Dedup, Similarity}
+import graft.queries.RelationalQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -327,5 +328,17 @@ class PlanAuditSpec extends SparkSpec {
     // a CodegenFallback would wrap the call in an `eval` on the expression
     // object; the real doGenCode inlines the fused loop with Math.sqrt
     assert(code.exists(_._2.contains("java.lang.Math.sqrt(")))
+  }
+
+  test("building a relational query a second time in a session runs no Spark job") {
+    // Each Tables read infers its schema once per session; no relational
+    // query runs an action while it is built. No query is exempt.
+    val jobs = RelationalQueries.all.map { q =>
+      q.fn(spark, sfDir)
+      q.name -> jobsRunBy(q.fn(spark, sfDir))
+    }
+    assert(jobs.size == 32)
+    val eager = jobs.filter(_._2 > 0)
+    assert(eager.isEmpty, s"Spark jobs on a second build: $eager")
   }
 }

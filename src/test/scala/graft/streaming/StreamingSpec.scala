@@ -363,6 +363,9 @@ class StreamingSpec extends SparkSpec {
     // manager keeps the first file where the FileContext one replaced it
     write("third", overwrite = true)
     assert(Files.readString(file) == "first")
+    // neither refused rename leaves its temp file or that file's .crc
+    assert(Using.resource(Files.list(dir))(_.iterator().asScala
+      .map(_.getFileName.toString).toSet) == Set("0", ".0.crc"))
   }
 
   test("E2E: the SENS flow runs under the same streaming driver") {
