@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.ChannelStats
 import graft.sinks.KvSink
+import graft.sources.udbf.UdbfDataSource
 
 /** The LPI `.dat` analysis — udbf_file_analysis.py:24-91 as a Spark
   * batch over one admitted file:
@@ -60,12 +61,13 @@ final class LpiAnalysis(
     val channels = df.columns.filterNot(_ == "ts").toSeq // F5
 
     // F4 — warm-up trim: cut files drop their first 10 seconds
-    // (sample_rate * 10 rows ≡ ts < min(ts) + 10 s for a monotone clock);
-    // a cut file with no frames has no min(ts) and stays empty
+    // (sample_rate * 10 rows ≡ ts < min(ts) + 10 s for a monotone clock,
+    // whose min(ts) is the first frame's, read on the driver); a cut file
+    // with no frames has no min(ts) and stays empty
     val trimmed =
       if (aligned) df
-      else Option(df.agg(min(col("ts"))).head().getTimestamp(0)).fold(df) { firstTs =>
-        df.filter(col("ts") >= lit(new java.sql.Timestamp(firstTs.getTime + 10000L)))
+      else UdbfDataSource.firstFrameMicros(file).fold(df) { firstMicros =>
+        df.filter(col("ts") >= timestamp_micros(lit(firstMicros + 10000000L)))
       }
 
     val stats = ChannelStats(trimmed, channels) // A1, round 3 (P14)

@@ -3,6 +3,7 @@ package graft.core
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** SparkSession factory for the graft engine.
@@ -90,8 +91,17 @@ object Sessions {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[LocalCheckpointFileManager].getName)
 
+  /** The local session. `getOrCreate` returns a session that already
+    * exists in the JVM as it is, and one built elsewhere may lack
+    * [[graft.expr.GraftExtensions]]: its queries would then fail later
+    * with `UNRESOLVED_ROUTINE`, and its sorts would skip
+    * [[graft.expr.SingleTaskSort]]. Such a session is refused here. */
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
+    if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_cosine")))
+      throw new IllegalStateException("the existing SparkSession was built without " +
+        "graft.expr.GraftExtensions: set spark.sql.extensions=graft.expr.GraftExtensions " +
+        "where that session is built, or stop it before calling Sessions.local")
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

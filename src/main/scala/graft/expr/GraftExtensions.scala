@@ -3,12 +3,18 @@ package graft.expr
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec, ValidateRequirements}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.DoubleType
 
 /** Engine extension point (`spark.sql.extensions=graft.expr.GraftExtensions`):
   * registers the engine's native Catalyst expressions as SQL functions so
   * `spark.sql("SELECT ole_to_timestamp(col)")` plans the codegen'd
-  * expression directly. Wired into [[graft.core.Sessions.builder]];
+  * expression directly, and installs the AQE rule [[SingleTaskSort]].
+  * Wired into [[graft.core.Sessions.builder]];
   * Column-side access goes through `call_function` (see
   * [[graft.operators.Similarity]] / [[graft.operators.Dedup]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -25,6 +31,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectQueryStagePrepRule(_ => SingleTaskSort)
+
     ext.injectFunction((
       FunctionIdentifier("ole_to_timestamp"),
       new ExpressionInfo(classOf[OleToTimestamp].getName, "ole_to_timestamp"),
@@ -261,5 +269,55 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "graft_logit_grad expects (y, n, buckets, weights)")
         LogisticGradAgg(children(0), children(1), children(2), children(3))
       }))
+  }
+}
+
+/** AQE query-stage preparation rule: a global sort whose input fits in
+  * one partition sorts in one task instead of range-partitioning first.
+  *
+  * It matches `SortExec(global = true)` directly over the
+  * `ShuffleExchangeExec(RangePartitioning, ENSURE_REQUIREMENTS)` that
+  * `EnsureRequirements` plans for an `orderBy`, and replaces the
+  * exchange with `CoalesceExec(1)`. The range exchange costs two Spark
+  * jobs (`RangePartitioner`'s sampling job and the shuffle-map stage);
+  * the coalesce costs none, and one sorted partition is a total order.
+  *
+  * It fires only when the input's size estimate
+  * (`logicalLink.stats.sizeInBytes`) is at or below the largest input
+  * AQE's coalescer reads back as one partition: `coalescePartitions.
+  * minPartitionSize` under `parallelismFirst` (the default), else
+  * `advisoryPartitionSizeInBytes`; never when coalescing is off. AQE
+  * re-plans after every materialized stage, so the estimate then carries
+  * the runtime size of the stages below it, and an input that a static
+  * estimate priced too high is caught on re-planning.
+  *
+  * Why it holds at 100 TB: it never changes parallelism. It fires only
+  * where AQE would have run the sort in one task anyway, so a large sort
+  * keeps its range exchange. The estimate it trusts is the one broadcast
+  * joins trust, at a 1 MB bound instead of `autoBroadcastJoinThreshold`.
+  * `repartitionByRange` (a user-requested origin) and
+  * `TakeOrderedAndProject` do not match. The single partition also
+  * changes the sort's output partitioning, which an operator above may
+  * rely on (a `UnionExec` passes a common child partitioning up), so the
+  * rewrite is kept only when `ValidateRequirements` still passes.
+  * Sessions without AQE never run the rule. */
+object SingleTaskSort extends Rule[SparkPlan] {
+
+  /** Bytes that AQE's coalescer reads as one partition; None when it
+    * does not coalesce. */
+  private def onePartitionBytes: Option[Long] =
+    if (!conf.coalesceShufflePartitionsEnabled) None
+    else if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+      Some(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+    else Some(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+
+  override def apply(plan: SparkPlan): SparkPlan = onePartitionBytes.fold(plan) { limit =>
+    val rewritten = plan.transformUp {
+      case s @ SortExec(_, true,
+          ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
+          if child.logicalLink.exists(_.stats.sizeInBytes <= limit) =>
+        s.copy(child = CoalesceExec(1, child))
+    }
+    if (ValidateRequirements.validate(rewritten)) rewritten else plan
   }
 }

@@ -104,6 +104,14 @@ object UdbfDataSource {
     StructType(tsField +: channelFields)
   }
 
+  /** Micros of the file's first admitted frame, decoded on the driver
+    * with no Spark job; None for a file with no frames. Frames are
+    * monotone, so this is the file's `min(ts)`. */
+  def firstFrameMicros(file: String): Option[Long] = {
+    val cursor = new UdbfCursor(file, Array.empty, DefaultChunkFrames)
+    if (cursor.advance()) Some(cursor.currentMicros) else None
+  }
+
   /** P5 — channel-name normalization, as applied by the reference
     * immediately after header read (DataConverterUDBF.py:104). */
   def normalizeName(name: String): String = name.replace('-', '_')

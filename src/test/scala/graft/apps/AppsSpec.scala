@@ -75,7 +75,7 @@ class AppsSpec extends SparkSpec {
     assert(kv.hget("stats:ae_2024-03-15_12-00-00", "amplitude:mean").contains("20.0"))
   }
 
-  test("LPI: one Spark execution per aligned file, two per cut file (decode once)") {
+  test("LPI: a cut file runs one Spark execution and as many jobs as an aligned file") {
     val dir = Files.createTempDirectory("lpi_execs")
     val stats = Files.createTempDirectory("lpi_execs_stats")
     val chans = Seq(ChannelSpec("ch_a", "V"), ChannelSpec("ch_b", "°C"))
@@ -104,14 +104,19 @@ class AppsSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       assert(executions(aligned) == 1) // stats only
-      assert(executions(cut) == 2) // F4's min(ts) trim + stats
+      assert(executions(cut) == 1) // F4's first frame is read on the driver
     } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobsRunBy(lpi.processFile(cut.toString)) ==
+      jobsRunBy(lpi.processFile(aligned.toString)))
     assert(kv.hget("stats:fhe_100hz_2024-03-15_12-00-00", "ch_b:max").contains("2000.0"))
     assert(Files.readString(stats.resolve("fhe_100hz_2024-03-15_12-03-27_stats.csv")) ==
       """Sensor,Mean,Minimum,Maximum
         |ch_a,1499.5,1000.0,1999.0
         |ch_b,1500.5,1001.0,2000.0
         |""".stripMargin)
+    assert(kv.hgetAll("stats:fhe_100hz_2024-03-15_12-03-27") == Map(
+      "ch_a:mean" -> "1499.5", "ch_a:min" -> "1000.0", "ch_a:max" -> "1999.0",
+      "ch_b:mean" -> "1500.5", "ch_b:min" -> "1001.0", "ch_b:max" -> "2000.0"))
   }
 
   test("Event: gate → fetch → validate → hash → dedup → idempotent store") {

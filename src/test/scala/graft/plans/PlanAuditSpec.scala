@@ -3,7 +3,9 @@ package graft.plans
 import graft.SparkSpec
 import graft.operators.{Dedup, Similarity}
 import graft.queries.RelationalQueries
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** Mechanical guards for the physical-plan properties PLANS.md claims —
@@ -340,5 +342,67 @@ class PlanAuditSpec extends SparkSpec {
     assert(jobs.size == 32)
     val eager = jobs.filter(_._2 > 0)
     assert(eager.isEmpty, s"Spark jobs on a second build: $eager")
+  }
+
+  /** The relational queries whose result is a global sort (under at most
+    * a projection), built on `session`. */
+  private def globallySorted(session: SparkSession): Seq[(String, DataFrame)] = {
+    def endsInGlobalSort(p: LogicalPlan): Boolean = p match {
+      case s: Sort => s.global
+      case p: Project => endsInGlobalSort(p.child)
+      case _ => false
+    }
+    RelationalQueries.all.map(q => q.name -> q.fn(session, sfDir))
+      .filter { case (_, df) => endsInGlobalSort(df.queryExecution.optimizedPlan) }
+  }
+
+  /** `df`'s rows and its final AQE plan (without the initial plan that
+    * `AdaptiveSparkPlanExec` also prints), from running `df` itself. */
+  private def collectWithPlan(df: DataFrame): (Seq[Row], String) = {
+    val rows = df.collect().toSeq
+    val adaptive = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+    assert(adaptive.isFinalPlan)
+    (rows, adaptive.executedPlan.toString)
+  }
+
+  test("a relational query's final sort runs in one task: no rangepartitioning exchange") {
+    // q23's sort input is an inner join, whose size estimate is the
+    // product of its sides' sizes: it stays above 1 MB after every stage
+    // below it has run, so its range exchange stays
+    val exempt = Set("q23_interval_join")
+    val sorted = globallySorted(spark)
+    assert(sorted.size >= 30, s"only ${sorted.size} queries end in a global sort")
+    val ranged = sorted.filter { case (_, df) =>
+      collectWithPlan(df)._2.contains("rangepartitioning") }.map(_._1)
+    assert(ranged.toSet == exempt, s"range exchange kept by: $ranged")
+  }
+
+  test("a sort over more than minPartitionSize keeps its range exchange, same ordered output") {
+    val tiny = spark.newSession()
+    tiny.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
+    val default = globallySorted(spark).toMap.view.mapValues(collectWithPlan).toMap
+    val rewritten = globallySorted(tiny).filter { case (name, df) =>
+      val (rows, plan) = collectWithPlan(df)
+      val (defaultRows, defaultPlan) = default(name)
+      assert(rows == defaultRows, s"$name: ordered output differs")
+      val singleTask = defaultPlan.contains("Coalesce 1")
+      // an empty result (q11 here) is planned as an EmptyRelation, with no sort to run
+      assert(!singleTask || plan.contains("rangepartitioning") || plan.contains("EmptyRelation"),
+        s"$name: range exchange rewritten over a 1-byte threshold:\n$plan")
+      singleTask
+    }
+    assert(rewritten.size >= 20, s"only ${rewritten.size} sorts rewritten by default")
+  }
+
+  test("repartitionByRange is never rewritten, even when it fits in one partition") {
+    val ids = spark.range(100).toDF("id")
+    Seq(ids.repartitionByRange(4, col("id")), ids.repartitionByRange(col("id")))
+      .map(_.orderBy(col("id")))
+      .foreach { df =>
+        val (rows, plan) = collectWithPlan(df)
+        assert(plan.contains("rangepartitioning") && !plan.contains("Coalesce 1"),
+          s"user range repartition rewritten:\n$plan")
+        assert(rows.map(_.getLong(0)) == (0L until 100L))
+      }
   }
 }

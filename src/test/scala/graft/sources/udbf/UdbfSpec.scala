@@ -104,6 +104,19 @@ class UdbfSpec extends SparkSpec {
       .load(p2.toString).count() == 30)
   }
 
+  test("firstFrameMicros is the file's min(ts), read with no Spark job; None without frames") {
+    val f = UdbfFixtures.ensure(tmpDir)
+    var first: Option[Long] = None
+    assert(jobsRunBy { first = UdbfDataSource.firstFrameMicros(f) } == 0)
+    val minTs = spark.read.format("udbf").load(f)
+      .agg(unix_micros(min(col("ts")))).head().getLong(0)
+    assert(first.contains(minTs) && minTs == UdbfFixtures.StartMicros)
+    val empty = Paths.get(tmpDir, "empty.dat")
+    UdbfWriter.write(empty, Seq(ChannelSpec("c", "V")), 0,
+      (i, _) => i.toDouble, 1710504000000000L, 100.0)
+    assert(UdbfDataSource.firstFrameMicros(empty.toString).isEmpty)
+  }
+
   test("files without a per-record time field derive ts from frame index") {
     val dir = tmpDir
     val p = Paths.get(dir, "notime.dat")
