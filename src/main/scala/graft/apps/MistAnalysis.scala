@@ -22,7 +22,7 @@ final class MistAnalysis(
     spark: SparkSession,
     statsDir: String,
     kv: KvSink,
-    ttlSeconds: Long = 60) {
+    ttlSeconds: Long = graft.core.GraftConfig.basicTtlSeconds) {
 
   def processFile(file: String): Unit = {
     val p = Paths.get(file)
@@ -38,8 +38,9 @@ final class MistAnalysis(
     if (numericCols.isEmpty)
       throw new IllegalArgumentException(s"No numeric channels in $file")
 
-    // one row per numeric channel of ONE file — schema-width-bounded
-    PublishStats(graft.core.Bounded.collect(ChannelStats(df, numericCols), 10000,
+    // one row per numeric channel of ONE file (ChannelStats groups by
+    // sensor name)
+    PublishStats(graft.core.Bounded.collect(ChannelStats(df, numericCols), numericCols.size,
       "MistAnalysis channel stats"), statsDir, stem, kv, ttlSeconds)
   }
 }

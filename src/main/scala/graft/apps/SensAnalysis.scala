@@ -16,12 +16,13 @@ import graft.sinks.KvSink
   *   null-coerced; all-null ⇒ physical last row with an ordinal
   *   tiebreaker, mirroring pandas' stable-sort determinism O1) →
   *   R2/P9 row → KV pairs `{stem}_{col}` (nulls → "", timestamps → ISO)
-  *   plus `{stem}_timestamp` → K3 hash publish with TTL 60.
+  *   plus `{stem}_timestamp` → K3 hash publish with TTL
+  *   `BASIC_REDIS_TTL` (default 60).
   */
 final class SensAnalysis(
     spark: SparkSession,
     kv: KvSink,
-    ttlSeconds: Long = 60) {
+    ttlSeconds: Long = graft.core.GraftConfig.basicTtlSeconds) {
 
   def processFile(file: String): Unit = {
     val p = Paths.get(file)

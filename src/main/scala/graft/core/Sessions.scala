@@ -94,8 +94,8 @@ object Sessions {
   /** The local session. `getOrCreate` returns a session that already
     * exists in the JVM as it is, and one built elsewhere may lack
     * [[graft.expr.GraftExtensions]]: its queries would then fail later
-    * with `UNRESOLVED_ROUTINE`, and its sorts would skip
-    * [[graft.expr.SingleTaskSort]]. Such a session is refused here. */
+    * with `UNRESOLVED_ROUTINE`, and its plans would skip
+    * [[graft.expr.SingleTaskExchange]]. Such a session is refused here. */
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
     if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_cosine")))

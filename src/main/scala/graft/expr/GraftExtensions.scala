@@ -3,17 +3,24 @@ package graft.expr
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec, ValidateRequirements}
+import org.apache.spark.sql.execution.{CoalesceExec, ExecSubqueryExpression, FileSourceScanExec,
+  SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeExec,
+  ValidateRequirements}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.DoubleType
 
 /** Engine extension point (`spark.sql.extensions=graft.expr.GraftExtensions`):
   * registers the engine's native Catalyst expressions as SQL functions so
   * `spark.sql("SELECT ole_to_timestamp(col)")` plans the codegen'd
-  * expression directly, and installs the AQE rule [[SingleTaskSort]].
+  * expression directly, and installs the AQE rule [[SingleTaskExchange]].
   * Wired into [[graft.core.Sessions.builder]];
   * Column-side access goes through `call_function` (see
   * [[graft.operators.Similarity]] / [[graft.operators.Dedup]]). */
@@ -31,7 +38,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectQueryStagePrepRule(_ => SingleTaskSort)
+    ext.injectQueryStagePrepRule(_ => SingleTaskExchange)
 
     ext.injectFunction((
       FunctionIdentifier("ole_to_timestamp"),
@@ -272,36 +279,56 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** AQE query-stage preparation rule: a global sort whose input fits in
-  * one partition sorts in one task instead of range-partitioning first.
+/** AQE query-stage preparation rule: an exchange that only moves data
+  * one task holds is replaced by `CoalesceExec(1)`, so its two sides run
+  * in one task of one stage. It has two cases.
   *
-  * It matches `SortExec(global = true)` directly over the
-  * `ShuffleExchangeExec(RangePartitioning, ENSURE_REQUIREMENTS)` that
-  * `EnsureRequirements` plans for an `orderBy`, and replaces the
-  * exchange with `CoalesceExec(1)`. The range exchange costs two Spark
-  * jobs (`RangePartitioner`'s sampling job and the shuffle-map stage);
-  * the coalesce costs none, and one sorted partition is a total order.
+  * A global sort whose input fits in one partition: `SortExec(global =
+  * true)` directly over the `ShuffleExchangeExec(RangePartitioning,
+  * ENSURE_REQUIREMENTS)` that `EnsureRequirements` plans for an
+  * `orderBy`. The range exchange costs two Spark jobs
+  * (`RangePartitioner`'s sampling job and the shuffle-map stage); the
+  * coalesce costs none, and one sorted partition is a total order. It
+  * fires only when the input's size estimate (`logicalLink.stats.
+  * sizeInBytes`) is at or below the largest input AQE's coalescer reads
+  * back as one partition: `coalescePartitions.minPartitionSize` under
+  * `parallelismFirst` (the default), else `advisoryPartitionSizeInBytes`.
+  * AQE re-plans after every materialized stage, so the estimate then
+  * carries the runtime size of the stages below it, and an input that a
+  * static estimate priced too high is caught on re-planning.
   *
-  * It fires only when the input's size estimate
-  * (`logicalLink.stats.sizeInBytes`) is at or below the largest input
-  * AQE's coalescer reads back as one partition: `coalescePartitions.
-  * minPartitionSize` under `parallelismFirst` (the default), else
-  * `advisoryPartitionSizeInBytes`; never when coalescing is off. AQE
-  * re-plans after every materialized stage, so the estimate then carries
-  * the runtime size of the stages below it, and an input that a static
-  * estimate priced too high is caught on re-planning.
+  * A partial aggregate that runs as one task: the `ENSURE_REQUIREMENTS`
+  * `ShuffleExchangeExec` between the map and the final half of Spark's
+  * partial/final aggregate pair (a distinct-only aggregate, with no
+  * aggregate functions, included). The partial aggregate runs as one
+  * task when, through unary operators only and with no exchange or query
+  * stage in between, it reads a scan with at most one planned input
+  * partition: a DataSource V2 scan with one `inputPartitions` entry, or
+  * a non-bucketed v1 file scan of at most one file no longer than its
+  * split size. The exchange then feeds one consumer from one producer:
+  * it costs a shuffle-map job, its shuffle files and an AQE re-plan, and
+  * moves rows that stay in one task anyway. This case does not fire under
+  * a range exchange that the sort case kept: the aggregate's stage is
+  * what gives that sort, on re-planning, the runtime size it is
+  * rewritten on, and without it the sort would pay its sampling job.
   *
-  * Why it holds at 100 TB: it never changes parallelism. It fires only
-  * where AQE would have run the sort in one task anyway, so a large sort
-  * keeps its range exchange. The estimate it trusts is the one broadcast
-  * joins trust, at a 1 MB bound instead of `autoBroadcastJoinThreshold`.
-  * `repartitionByRange` (a user-requested origin) and
-  * `TakeOrderedAndProject` do not match. The single partition also
-  * changes the sort's output partitioning, which an operator above may
-  * rely on (a `UnionExec` passes a common child partitioning up), so the
-  * rewrite is kept only when `ValidateRequirements` still passes.
-  * Sessions without AQE never run the rule. */
-object SingleTaskSort extends Rule[SparkPlan] {
+  * Why it holds at 100 TB: neither case lowers parallelism. The sort
+  * case fires only where AQE would have run the sort in one task anyway,
+  * so a large sort keeps its range exchange; the estimate it trusts is
+  * the one broadcast joins trust, at a 1 MB bound instead of
+  * `autoBroadcastJoinThreshold`. The aggregate case never meets a large
+  * input, because a scan larger than `maxPartitionBytes` is split into
+  * several tasks; where it fires, the final merge reads only the rows
+  * the same task's partial aggregate built, so it costs at most what
+  * the partial did. User-requested origins (`repartition`,
+  * `repartitionByRange`) and `TakeOrderedAndProject` do not match. Each
+  * case changes the output partitioning of the operators above it,
+  * which an operator further up may rely on (a join's co-partitioned
+  * sides, or a `UnionExec` that passes a common child partitioning up),
+  * so each case's rewrites are kept only when `ValidateRequirements`
+  * still passes. Neither fires when AQE does not coalesce partitions,
+  * and sessions without AQE never run the rule. */
+object SingleTaskExchange extends Rule[SparkPlan] {
 
   /** Bytes that AQE's coalescer reads as one partition; None when it
     * does not coalesce. */
@@ -311,13 +338,53 @@ object SingleTaskSort extends Rule[SparkPlan] {
       Some(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
     else Some(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
 
+  /** The map half of a partial/final aggregate pair: it requires no
+    * child distribution and holds only partial aggregate buffers. */
+  private def isPartialAggregate(plan: SparkPlan): Boolean = plan match {
+    case a: BaseAggregateExec =>
+      a.requiredChildDistributionExpressions.isEmpty &&
+        a.aggregateExpressions.forall(e => e.mode == Partial || e.mode == PartialMerge)
+    case _ => false
+  }
+
+  /** `plan` runs as one task: through unary operators only, it reads one
+    * scan with at most one planned input partition. */
+  private def runsAsOneTask(plan: SparkPlan): Boolean = plan match {
+    case _: Exchange | _: QueryStageExec => false
+    case s: BatchScanExec => s.inputPartitions.size <= 1
+    case s: FileSourceScanExec =>
+      !s.bucketedScan && !s.partitionFilters.exists(ExecSubqueryExpression.hasSubquery) && {
+        val files = s.selectedPartitions
+        files.totalNumberOfFiles <= 1 &&
+          files.totalFileSize <= FilePartition.maxSplitBytes(s.relation.sparkSession, files)
+      }
+    case u: UnaryExecNode => runsAsOneTask(u.child)
+    case _ => false
+  }
+
+  /** `plan` with every exchange after a one-task partial aggregate
+    * replaced, bottom-up, so a distinct aggregate's second exchange sees
+    * its first one replaced. A range exchange is not entered. */
+  private def coalescePartialAggregates(plan: SparkPlan): SparkPlan = plan match {
+    case ShuffleExchangeExec(_: RangePartitioning, _, ENSURE_REQUIREMENTS, _) => plan
+    case _ => plan.mapChildren(coalescePartialAggregates) match {
+      case ShuffleExchangeExec(_, child, ENSURE_REQUIREMENTS, _)
+          if isPartialAggregate(child) && runsAsOneTask(child) =>
+        CoalesceExec(1, child)
+      case other => other
+    }
+  }
+
   override def apply(plan: SparkPlan): SparkPlan = onePartitionBytes.fold(plan) { limit =>
-    val rewritten = plan.transformUp {
+    val sorts = (p: SparkPlan) => p.transformUp {
       case s @ SortExec(_, true,
           ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
           if child.logicalLink.exists(_.stats.sizeInBytes <= limit) =>
         s.copy(child = CoalesceExec(1, child))
     }
-    if (ValidateRequirements.validate(rewritten)) rewritten else plan
+    Seq(sorts, coalescePartialAggregates _).foldLeft(plan) { (current, rewrite) =>
+      val rewritten = rewrite(current)
+      if (ValidateRequirements.validate(rewritten)) rewritten else current
+    }
   }
 }

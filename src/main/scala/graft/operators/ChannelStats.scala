@@ -11,7 +11,9 @@ import graft.functions.ReferenceFunctions.roundStat
   * the wide channel matrix to long `(channel, value)` rows, then one
   * hash aggregation — map-side partial aggregation makes this a single
   * small shuffle of (channels × partitions) rows regardless of input size,
-  * which is the plan that survives 100 TB.
+  * which is the plan that survives 100 TB. A one-file input (one logger
+  * file, one input partition) has no shuffle: [[graft.expr.SingleTaskExchange]]
+  * runs its partial and final aggregate in the one task that reads it.
   */
 object ChannelStats {
 

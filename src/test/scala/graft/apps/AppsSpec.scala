@@ -3,7 +3,7 @@ package graft.apps
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
-import graft.sinks.{InMemoryKvSink, JsonDocStore}
+import graft.sinks.{InMemoryKvSink, JsonDocStore, KvSink}
 import graft.sources.KvScan
 import graft.sources.udbf.UdbfWriter
 import graft.sources.udbf.UdbfWriter.ChannelSpec
@@ -75,9 +75,9 @@ class AppsSpec extends SparkSpec {
     assert(kv.hget("stats:ae_2024-03-15_12-00-00", "amplitude:mean").contains("20.0"))
   }
 
-  test("LPI: a cut file runs one Spark execution and as many jobs as an aligned file") {
-    val dir = Files.createTempDirectory("lpi_execs")
-    val stats = Files.createTempDirectory("lpi_execs_stats")
+  /** An aligned and a cut 100 Hz LPI file of 2000 frames in `dir`:
+    * channel j of frame i holds `i + j`. */
+  private def alignedAndCut(dir: java.nio.file.Path): (java.nio.file.Path, java.nio.file.Path) = {
     val chans = Seq(ChannelSpec("ch_a", "V"), ChannelSpec("ch_b", "°C"))
     val aligned = dir.resolve("fhe_100hz_2024-03-15_12-00-00.dat")
     val cut = dir.resolve("fhe_100hz_2024-03-15_12-03-27.dat")
@@ -85,6 +85,13 @@ class AppsSpec extends SparkSpec {
       1710504000000000L, 100.0)
     UdbfWriter.write(cut, chans, 2000, (i, j) => (i + j).toDouble,
       1710504207000000L, 100.0)
+    (aligned, cut)
+  }
+
+  test("LPI: a cut file runs one Spark execution and as many jobs as an aligned file") {
+    val dir = Files.createTempDirectory("lpi_execs")
+    val stats = Files.createTempDirectory("lpi_execs_stats")
+    val (aligned, cut) = alignedAndCut(dir)
     val kv = new InMemoryKvSink()
     val lpi = new LpiAnalysis(spark, stats.toString, kv)
     val ended = new java.util.concurrent.atomic.AtomicInteger
@@ -117,6 +124,66 @@ class AppsSpec extends SparkSpec {
     assert(kv.hgetAll("stats:fhe_100hz_2024-03-15_12-03-27") == Map(
       "ch_a:mean" -> "1499.5", "ch_a:min" -> "1000.0", "ch_a:max" -> "1999.0",
       "ch_b:mean" -> "1500.5", "ch_b:min" -> "1001.0", "ch_b:max" -> "2000.0"))
+  }
+
+  test("LPI and MIST: a one-file stats action runs one Spark job") {
+    // one logger file is one input partition, so ChannelStats' partial
+    // and final aggregates run in one task with no shuffle-map job
+    val dir = Files.createTempDirectory("one_job")
+    val stats = Files.createTempDirectory("one_job_stats")
+    val (aligned, cut) = alignedAndCut(dir)
+    val kv = new InMemoryKvSink()
+    val lpi = new LpiAnalysis(spark, stats.toString, kv)
+    assert(jobsRunBy(lpi.processFile(aligned.toString)) == 1)
+    assert(jobsRunBy(lpi.processFile(cut.toString)) == 1)
+    assert(kv.hgetAll("stats:fhe_100hz_2024-03-15_12-00-00") == Map(
+      "ch_a:mean" -> "999.5", "ch_a:min" -> "0.0", "ch_a:max" -> "1999.0",
+      "ch_b:mean" -> "1000.5", "ch_b:min" -> "1.0", "ch_b:max" -> "2000.0"))
+
+    val mist = dir.resolve("ae_2024-03-15_12-00-00.csv")
+    Files.writeString(mist, "sensor_name,amplitude,counts\nA,10.0,5\nA,20.0,7\nB,30.0,9\n")
+    // MIST's CSV read infers its schema with jobs of its own; the stats
+    // action adds one
+    val inferJobs = jobsRunBy(
+      spark.read.option("header", "true").option("inferSchema", "true").csv(mist.toString))
+    assert(jobsRunBy(new MistAnalysis(spark, stats.toString, kv).processFile(mist.toString)) ==
+      inferJobs + 1)
+    assert(kv.hgetAll("stats:ae_2024-03-15_12-00-00") == Map(
+      "amplitude:mean" -> "20.0", "amplitude:min" -> "10.0", "amplitude:max" -> "30.0",
+      "counts:mean" -> "7.0", "counts:min" -> "5.0", "counts:max" -> "9.0"))
+  }
+
+  test("LPI, MIST and SENS write every key with BASIC_REDIS_TTL by default") {
+    val ttls = scala.collection.concurrent.TrieMap.empty[String, Option[Long]]
+    val kv = new KvSink {
+      private val store = new InMemoryKvSink()
+      override def hset(key: String, mapping: Map[String, String], ttl: Option[Long]): Unit = {
+        ttls.put(key, ttl); store.hset(key, mapping, ttl)
+      }
+      override def set(key: String, value: String, ttl: Option[Long]): Unit = {
+        ttls.put(key, ttl); store.set(key, value, ttl)
+      }
+      override def get(key: String): Option[String] = store.get(key)
+      override def hget(key: String, field: String): Option[String] = store.hget(key, field)
+      override def hgetAll(key: String): Map[String, String] = store.hgetAll(key)
+      override def scan(pattern: String): Seq[String] = store.scan(pattern)
+    }
+    val dir = Files.createTempDirectory("ttl")
+    val stats = Files.createTempDirectory("ttl_stats").toString
+    val lpi = dir.resolve("fhe_1hz_2024-03-15_12-00-00.dat")
+    UdbfWriter.write(lpi, Seq(ChannelSpec("ch_a", "V")), 20, (i, _) => i.toDouble,
+      1710504000000000L, 1.0)
+    new LpiAnalysis(spark, stats, kv).processFile(lpi.toString)
+    val mist = dir.resolve("ae_2024-03-15_12-00-00.csv")
+    Files.writeString(mist, "amplitude\n1.0\n2.0\n")
+    new MistAnalysis(spark, stats, kv).processFile(mist.toString)
+    val sens = dir.resolve("plain.csv")
+    Files.writeString(sens, "name,score\nx,1\n")
+    new SensAnalysis(spark, kv).processFile(sens.toString)
+    assert(ttls.keySet == Set("health:lpi_1hz_file_size", "stats:fhe_1hz_2024-03-15_12-00-00",
+      "stats:ae_2024-03-15_12-00-00", "stats:plain"))
+    val ttl = Some(graft.core.GraftConfig.basicTtlSeconds)
+    assert(ttls.filter(_._2 != ttl).isEmpty, s"keys not written with TTL $ttl: $ttls")
   }
 
   test("Event: gate → fetch → validate → hash → dedup → idempotent store") {

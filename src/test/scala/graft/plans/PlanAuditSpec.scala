@@ -1,11 +1,14 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{ChannelStats, Dedup, Similarity}
 import graft.queries.RelationalQueries
+import graft.sources.udbf.UdbfWriter
+import graft.sources.udbf.UdbfWriter.ChannelSpec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Mechanical guards for the physical-plan properties PLANS.md claims —
@@ -16,13 +19,26 @@ class PlanAuditSpec extends SparkSpec {
   import testImplicits._
 
   private val sfDir = "/root/testdata/sf0.001"
-  private def documents = spark.read.parquet(s"$sfDir/documents.parquet")
-    .select(col("doc_id"), col("text"))
-  private def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
-  private def executedPlan(df: DataFrame): String = {
-    df.count()
-    df.queryExecution.executedPlan.toString
+  /** The session of the shape guards: its scans split into several tasks
+    * (every sf0.001 table file is larger than 1 KB), as every scan does at
+    * scale. In the default session a one-file scan runs as one task and
+    * [[graft.expr.SingleTaskExchange]] removes the exchange after its
+    * partial aggregate, which would hide the exchanges these guards audit. */
+  private lazy val split: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    s
+  }
+  private def documents = split.read.parquet(s"$sfDir/documents.parquet")
+    .select(col("doc_id"), col("text"))
+  private def embeddings = split.read.parquet(s"$sfDir/embeddings.parquet")
+
+  /** The plan `df` ran with, from running `df` itself (see
+    * [[collectWithPlan]] for an adaptive one). */
+  private def executedPlan(df: DataFrame): String = df.queryExecution.executedPlan match {
+    case _: AdaptiveSparkPlanExec => collectWithPlan(df)._2
+    case plan => df.collect(); plan.toString
   }
 
   /** Argument lists of every shuffle exchange in the plan. */
@@ -90,8 +106,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("dimension join broadcasts the small side (no shuffle of the fact table)") {
-    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
-    val customer = spark.read.parquet(s"$sfDir/customer.parquet")
+    val nation = split.read.parquet(s"$sfDir/nation.parquet")
+    val customer = split.read.parquet(s"$sfDir/customer.parquet")
     val joined = customer.join(broadcast(nation),
       customer("c_nationkey") === nation("n_nationkey"))
       .groupBy(col("n_name")).agg(count(lit(1)).as("n"))
@@ -103,7 +119,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("session_window aggregation is a single exchange on (user, window)") {
-    val ev = Seq(("2024-03-15 12:00:00", 1L, 1.0), ("2024-03-15 12:20:00", 1L, 2.0))
+    val ev = split.createDataFrame(
+        Seq(("2024-03-15 12:00:00", 1L, 1.0), ("2024-03-15 12:20:00", 1L, 2.0)))
       .toDF("ts_s", "user_id", "value")
       .select(to_timestamp(col("ts_s")).as("ts"), col("user_id"), col("value"))
     val plan = executedPlan(
@@ -140,7 +157,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("Packing: the only corpus shuffle is the per-stream window partition") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = split.read.parquet(s"$sfDir/documents.parquet")
     val df = graft.operators.Packing.contextPack(docs, "doc_id", "text",
       "lang", ctxLen = 128, shards = 4)
     val keys = shuffleKeys(executedPlan(df))
@@ -150,7 +167,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("Mixture: quota side broadcasts; corpus aggregated once, ranked once") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = split.read.parquet(s"$sfDir/documents.parquet")
     val df = graft.operators.Mixture.temperatureSample(
       docs, "source", "text", "doc_id", total = 50)
     val plan = executedPlan(df)
@@ -165,7 +182,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   private def namedQuery(name: String): DataFrame =
-    graft.queries.LlmQueries.all.find(_.name == name).get.fn(spark, sfDir)
+    graft.queries.LlmQueries.all.find(_.name == name).get.fn(split, sfDir)
 
   test("t34 hash split: pure projection — zero hash shuffles before the output sort") {
     val plan = executedPlan(namedQuery("t34_hash_split"))
@@ -404,5 +421,47 @@ class PlanAuditSpec extends SparkSpec {
           s"user range repartition rewritten:\n$plan")
         assert(rows.map(_.getLong(0)) == (0L until 100L))
       }
+  }
+
+  /** Two 1 Hz udbf logger files of 100 frames in one new directory:
+    * channel j of frame i holds `i + 10 * j` in the first file and 100
+    * more in the second. */
+  private def twoLoggerFiles(): (java.nio.file.Path, java.nio.file.Path) = {
+    val dir = java.nio.file.Files.createTempDirectory("plan_udbf")
+    val chans = Seq(ChannelSpec("ch_a", "V"), ChannelSpec("ch_b", "V"))
+    val first = dir.resolve("fhe_1hz_2024-03-15_12-00-00.dat")
+    UdbfWriter.write(first, chans, 100, (i, j) => (i + 10 * j).toDouble,
+      1710504000000000L, 1.0)
+    UdbfWriter.write(dir.resolve("fhe_1hz_2024-03-15_12-10-00.dat"), chans, 100,
+      (i, j) => (i + 10 * j + 100).toDouble, 1710504600000000L, 1.0)
+    (dir, first)
+  }
+
+  test("ChannelStats over a two-file udbf read keeps its hashpartitioning exchange") {
+    val (dir, first) = twoLoggerFiles()
+    // the LPI and MIST apps read their stats through Bounded.collect's limit
+    def stats(path: java.nio.file.Path) =
+      collectWithPlan(ChannelStats(spark.read.format("udbf").load(path.toString),
+        Seq("ch_a", "ch_b")).limit(3))
+    // two files are two tasks: the partial aggregates' rows are shuffled
+    val (rows, plan) = stats(dir)
+    assert(plan.contains("hashpartitioning(sensor"), s"exchange removed:\n$plan")
+    assert(rows == Seq(Row("ch_a", 99.5, 0.0, 199.0), Row("ch_b", 109.5, 10.0, 209.0)))
+    // one file is one task: partial and final aggregate run in it
+    val (oneRows, onePlan) = stats(first)
+    assert(!onePlan.contains("hashpartitioning"), s"one-task exchange kept:\n$onePlan")
+    assert(oneRows == Seq(Row("ch_a", 49.5, 0.0, 99.0), Row("ch_b", 59.5, 10.0, 109.0)))
+  }
+
+  test("a one-task input whose exchange feeds a window, not a partial aggregate, keeps it") {
+    val (_, first) = twoLoggerFiles()
+    val ranked = spark.read.format("udbf").load(first.toString)
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("ch_a") % 2).orderBy(col("ts"))))
+    val (rows, plan) = collectWithPlan(ranked)
+    assert(plan.contains("Exchange hashpartitioning("), s"window exchange removed:\n$plan")
+    assert(!plan.contains("Coalesce 1"), plan)
+    assert(rows.map(r => r.getAs[Double]("ch_a").toInt -> r.getAs[Int]("rank")).sorted ==
+      (0 until 100).map(i => i -> (i / 2 + 1)))
   }
 }
