@@ -26,8 +26,7 @@ object SparkEntry {
     defs.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (hash-based LSH/MinHash/SimHash) → driver records a rows-only check. */
+    * the same parquet tables. Every registered query has one. */
   def oracleSql: Map[String, String] =
-    defs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    defs.map(q => q.name -> q.oracle).toMap
 }

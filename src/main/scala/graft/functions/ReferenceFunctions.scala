@@ -53,10 +53,6 @@ object ReferenceFunctions {
   def relativeTime(ordinal: Column, sampleRate: Double): Column =
     ordinal.cast("double") / lit(sampleRate)
 
-  /** P5 — channel-name normalization `-` → `_`
-    * (DataConverterUDBF.py:104). */
-  def normalizeChannelName(name: Column): Column = translate(name, "-", "_")
-
   /** P7 — filename-embedded timestamp extraction
     * (helper/utility.py:8-27): regex date + time groups, parsed with
     * hour-minute-second separated by `-`. Returns epoch seconds (BIGINT). */

@@ -39,8 +39,8 @@ object IncrementalDedup {
     df.select(col(idCol).as("doc_id"),
       Dedup.minHashSignature(col(textCol), numHashes).as("sig"))
 
-  private[graft] def banded(sigs: DataFrame, idOut: String, sigOut: String,
-                            numHashes: Int, bands: Int): DataFrame = {
+  private def banded(sigs: DataFrame, idOut: String, sigOut: String,
+                     numHashes: Int, bands: Int): DataFrame = {
     val rows = numHashes / bands
     sigs.select(col("doc_id").as(idOut), col("sig").as(sigOut),
         explode(transform(sequence(lit(0), lit(bands - 1)),

@@ -4,12 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.ReferenceFunctions.kvValue
 
-/** R1/R2 — reshape to the reference's flat KV form (SURVEY.md §2.6).
-  *
-  * R1: stats rows (sensor, mean, minimum, maximum) → KV rows
-  * `"{sensor}:mean" → "…"` (udbf_file_analysis.py:69-83).
-  * R2: a single wide row → `"{prefix}_{col}" → str(v)` pairs
-  * (sens_file_analysis.py:41-55).
+/** R1 — reshape to the reference's flat KV form (SURVEY.md §2.6):
+  * stats rows (sensor, mean, minimum, maximum) → KV rows
+  * `"{sensor}:mean" → "…"` (udbf_file_analysis.py:69-83). R2, one wide
+  * row → `"{prefix}_{col}"` pairs, is built on the driver by
+  * `graft.apps.SensAnalysis`.
   *
   * Emitted as exploded (kv_key, kv_value) rows rather than a MapType so
   * the result is a plain relational table (joinable, sinkable, and
@@ -26,13 +25,5 @@ object KvReshape {
       .unpivot(Array(col(sensorCol)), statCols.map(col).toArray, "stat", "value")
       .select(
         concat(col(sensorCol), lit(":"), col("stat")).as("kv_key"),
-        kvValue(col("value")).as("kv_value"))
-
-  /** R2 — each row → one KV pair per column, keyed `{prefix}_{col}`. */
-  def rowToKv(df: DataFrame, prefixCol: String, valueCols: Seq[String]): DataFrame =
-    df.select(col(prefixCol) +: valueCols.map(c => col(c).cast("double")): _*)
-      .unpivot(Array(col(prefixCol)), valueCols.map(col).toArray, "field", "value")
-      .select(
-        concat(col(prefixCol), lit("_"), col("field")).as("kv_key"),
         kvValue(col("value")).as("kv_value"))
 }

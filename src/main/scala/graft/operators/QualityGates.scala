@@ -31,24 +31,6 @@ import graft.functions.TextFunctions
   */
 object QualityGates {
 
-  /** The shuffle-free subset of the battery as ONE boolean Column —
-    * word-count, mean-word-length, stopword, and symbol gates (everything
-    * except top-word concentration, which needs a tf aggregation).
-    * Being pure scan-stage arithmetic it composes anywhere a Column
-    * does: parquet scans, and STREAMING stages ahead of stateful dedup,
-    * where a grouped aggregate would be a second stateful operator.
-    * Gate-for-gate identical to [[apply]]'s flags (same rounding). */
-  def scanKeep(text: org.apache.spark.sql.Column,
-               minWords: Int = 5, maxWords: Int = 5000): org.apache.spark.sql.Column = {
-    val nWords = TextFunctions.tokenCount(text)
-    val meanWlen = round(TextFunctions.meanWordLength(text), 4)
-    val stopFrac = round(TextFunctions.stopwordRatio(text), 4)
-    val symbolFrac = round(TextFunctions.symbolRatio(text), 4)
-    nWords >= minWords && nWords <= maxWords &&
-      meanWlen >= 1.5 && meanWlen <= 10.0 &&
-      stopFrac >= 0.01 && symbolFrac <= 0.25
-  }
-
   def apply(
       docs: DataFrame,
       idCol: String = "doc_id",

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One verified query: a Spark DataFrame program plus (optionally) an
+/** One verified query: a Spark DataFrame program plus an
   * equivalent ANSI SQL text the driver runs in DuckDB over the same parquet
   * tables. Column names/types and row order must match between the two —
   * the correctness gate hash-compares values after sorting columns by name.
@@ -31,13 +31,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def sql(name: String)(oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle.stripMargin.trim))
-
-  /** Non-SQL-expressible op: driver records a weaker rows-only check. */
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
+    QueryDef(name, fn, oracle.stripMargin.trim)
 }

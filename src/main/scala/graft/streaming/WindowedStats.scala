@@ -25,35 +25,13 @@ object WindowedStats {
       tsCol: String,
       valueCols: Seq[String],
       windowLength: String = "10 minutes",
-      watermark: String = "5 minutes"): DataFrame =
-    windowed(samples, tsCol, valueCols, windowLength, windowLength, watermark)
-
-  /** Hopping (sliding) windows — the q26 batch shape under a watermark:
-    * each sample lands in windowLength/slide overlapping windows. State
-    * grows by the same factor (one row per open (window, sensor)) and
-    * stays watermark-bounded like the tumbling case. */
-  def hopping(
-      samples: DataFrame,
-      tsCol: String,
-      valueCols: Seq[String],
-      windowLength: String = "10 minutes",
-      slide: String = "5 minutes",
-      watermark: String = "5 minutes"): DataFrame =
-    windowed(samples, tsCol, valueCols, windowLength, slide, watermark)
-
-  private def windowed(
-      samples: DataFrame,
-      tsCol: String,
-      valueCols: Seq[String],
-      windowLength: String,
-      slide: String,
-      watermark: String): DataFrame = {
+      watermark: String = "5 minutes"): DataFrame = {
     val long = samples
       .withWatermark(tsCol, watermark)
       .select(col(tsCol) +: valueCols.map(c => col(c).cast("double")): _*)
       .unpivot(Array(col(tsCol)), valueCols.map(col).toArray, "sensor", "value")
     long
-      .groupBy(window(col(tsCol), windowLength, slide), col("sensor"))
+      .groupBy(window(col(tsCol), windowLength), col("sensor"))
       .agg(
         roundStat(avg(col("value"))).as("mean"),
         roundStat(min(col("value"))).as("minimum"),

@@ -1,10 +1,14 @@
 package graft.operators
 
+import java.nio.file.Files
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** PII truth table (each category, multiples, cross-category order) and
-  * the domain-blocklist admission semantics. */
+/** PII truth table (each category, multiples, cross-category order),
+  * the domain-blocklist admission semantics, and redaction inside a
+  * streaming plan. */
 class PiiRedactSpec extends SparkSpec {
   import testImplicits._
 
@@ -63,7 +67,6 @@ class PiiRedactSpec extends SparkSpec {
   }
 
   test("NULL text: zero counts, empty redaction") {
-    import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType)))
     val rows = java.util.Arrays.asList(org.apache.spark.sql.Row(1L, null))
@@ -84,5 +87,44 @@ class PiiRedactSpec extends SparkSpec {
     val kept = UrlDedup.domainFilter(rows, "url", blocked)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L, 4L, 5L))
+  }
+
+  private val docSchema = StructType(Seq(
+    StructField("ts", TimestampType),
+    StructField("doc_id", LongType),
+    StructField("text", StringType)))
+
+  private def writeDocs(dir: String, n: Int, rows: Seq[(String, Long, String)]): Unit =
+    rows.toDF("ts_s", "doc_id", "text")
+      .select(to_timestamp(col("ts_s")).as("ts"), col("doc_id"), col("text"))
+      .coalesce(1).write.parquet(s"$dir/batch$n")
+
+  test("streaming PII redaction: stateless scan-stage transform composes into the stream") {
+    // PiiRedact is pure column arithmetic, so it rides the streaming
+    // plan unchanged — redaction before admission means PII never
+    // reaches dedup state or the sink
+    val dir = Files.createTempDirectory("spii_src").toString
+    val ckpt = Files.createTempDirectory("spii_ckpt").toString
+    writeDocs(dir, 1, Seq(
+      ("2024-03-15 12:00:00", 1L, "contact me at alice@example.com or 10.1.2.3"),
+      ("2024-03-15 12:00:05", 2L, "nothing sensitive in this one")))
+
+    val stream = spark.readStream.schema(docSchema)
+      .option("pathGlobFilter", "*.parquet")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$dir/*")
+    val redacted = graft.operators.PiiRedact.redact(
+      stream, idCol = "doc_id", textCol = "text")
+
+    val q = redacted.writeStream.format("memory").queryName("spii_out")
+      .outputMode("append").option("checkpointLocation", ckpt).start()
+    try {
+      q.processAllAvailable()
+      val rows = spark.table("spii_out")
+        .collect().map(r => r.getLong(0) ->
+          (r.getLong(1), r.getLong(3), r.getString(5))).toMap
+      assert(rows(1L) == ((1L, 1L, "contact me at <EMAIL> or <IP>")))
+      assert(rows(2L) == ((0L, 0L, "nothing sensitive in this one")))
+    } finally q.stop()
   }
 }

@@ -89,21 +89,6 @@ class SelectionOpsSpec extends SparkSpec {
     assert(!out(2L).getAs[Boolean]("pass_nwords"))
   }
 
-  test("gates: scanKeep is gate-for-gate the batch battery minus top-word concentration") {
-    val d = docs(
-      (1L, "the quick brown fox jumps over a lazy dog in the field today"),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (3L, ""), (4L, "the of a to in is"),
-      (5L, ("the word " * 40).trim))
-    val batch = QualityGates(d)
-      .select(col("doc_id"), (col("pass_nwords") && col("pass_wlen") &&
-        col("pass_stop") && col("pass_symbol")).as("k"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val scan = d.select(col("doc_id"), QualityGates.scanKeep(col("text")).as("k"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(batch === scan)
-  }
-
   test("vocabulary report: counts, hapax, and TTR are closed-form per stratum") {
     val d = Seq(
       (1L, "a b a c", "en", "s1", 7L),

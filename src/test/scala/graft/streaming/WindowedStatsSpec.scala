@@ -54,40 +54,6 @@ class WindowedStatsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("hopping windows: each sample lands in windowLength/slide overlapping windows") {
-    val dir = Files.createTempDirectory("hop_src")
-    val ckpt = Files.createTempDirectory("hop_ckpt")
-    // one sample at 12:07 → 10-min/5-min-slide windows [12:00,12:10) and
-    // [12:05,12:15); a second at 12:12 → [12:05,12:15) and [12:10,12:20)
-    Seq(
-      ("2024-03-15 12:07:00", 2.0),
-      ("2024-03-15 12:12:00", 6.0))
-      .toDF("ts_s", "ch_a")
-      .select(to_timestamp(col("ts_s")).as("ts"), col("ch_a"))
-      .coalesce(1).write.parquet(dir.toString + "/batch1")
-
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("ch_a", DoubleType)))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(dir.toString + "/*")
-    val windowed = WindowedStats.hopping(stream, "ts", Seq("ch_a"))
-
-    val q = windowed.writeStream.format("memory").queryName("hop_out")
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt.toString).start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("hop_out").orderBy("window_start").collect()
-        .map(r => (r.getTimestamp(0).toString.substring(11, 16),
-          r.getDouble(3), r.getLong(6)))
-      assert(rows.toSeq === Seq(
-        ("12:00", 2.0, 1L),   // sample 1 only
-        ("12:05", 4.0, 2L),   // overlap window holds BOTH samples
-        ("12:10", 6.0, 1L)))  // sample 2 only
-    } finally q.stop()
-  }
-
   test("T5+K3: windowed stats publish to KV hashes keyed by window start") {
     val dir = Files.createTempDirectory("wkv_src")
     val ckpt = Files.createTempDirectory("wkv_ckpt")
