@@ -211,7 +211,7 @@ object Bench {
     * see. A child JVM makes the record honest BY CONSTRUCTION: its
     * heap, JIT, and block manager start empty no matter who calls.
     * The child inherits cwd + env (plus the marker), gets the same
-    * module opens / heap ceiling the probe runner uses, and reuses the
+    * module opens / heap ceiling `tools/runmain.sh` uses, and reuses the
     * parent's own `java.class.path` verbatim — so the spawn works from
     * sbt's forked runner (which stages each jar into its own hashed
     * bg-jobs dir, defeating any directory glob), runmain.sh, or a fat
@@ -301,13 +301,12 @@ object Bench {
     // repeats per query (default 2): round 14's committed record carried
     // a 4× t79 phantom — first-run JIT of the ADC codegen kernels under
     // load (6.67 s recorded vs 2.08 s isolated best) — that cost the
-    // judge an hour of adjudication. Per the ProbeBench convention the
-    // record is BEST-of-N wall (JIT/warm variance is harness artifact,
-    // not plan cost; the DuckDB baseline gets the same best-of-N
-    // treatment in tools/baseline_timing.py since r16, so the ratio is
-    // like-for-like) with the first-run walls kept alongside so a real
-    // first-run pathology (e.g. a cold-cache scan regression) still has
-    // a number.
+    // judge an hour of adjudication. The record is BEST-of-N wall
+    // (JIT/warm variance is harness artifact, not plan cost; the DuckDB
+    // baseline gets the same best-of-N treatment in
+    // tools/baseline_timing.py since r16, so the ratio is like-for-like)
+    // with the first-run walls kept alongside so a real first-run
+    // pathology (e.g. a cold-cache scan regression) still has a number.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2").toInt
 
     /** One timed execution: (wall s, process-cpu s, external-cpu s,

@@ -5243,7 +5243,8 @@ object LlmQueries {
   /** One curve-clustered copy of the events table per (session, corpus,
     * curve) — the t105/t106 input, built lazily so Verify/Bench reuse a
     * single write across repeated invocations. Temp-dir placed (fresh
-    * per JVM); content is deterministic given the corpus. */
+    * per JVM, removed when the JVM exits); content is deterministic
+    * given the corpus. */
   private val layoutCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String, Boolean),
       (String, graft.operators.Layout.CurveLayout)]
@@ -5251,8 +5252,9 @@ object LlmQueries {
                                     d: String, useHilbert: Boolean)
       : (String, graft.operators.Layout.CurveLayout) =
     layoutCache.getOrElseUpdate((s, d, useHilbert), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_t105")
-        .toString + "/events"
+      val root = java.nio.file.Files.createTempDirectory("graft_t105")
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+      val dir = root.toString + "/events"
       val ev = Tables.events(s, d)
         .select(col("event_type"), col("user_id"), col("value"))
       val layout = graft.operators.Layout.clusteredWrite(

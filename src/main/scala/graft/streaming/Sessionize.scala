@@ -1,43 +1,19 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Gap-based sessionization of an event stream — the canonical custom
-  * stateful-streaming operator (T6): events of one user belong to the
-  * same session while consecutive gaps stay within `gap`; a session ends
-  * `gap` after its last event.
+/** Gap-based sessionization of an event stream (q21): events of one user
+  * belong to the same session while consecutive gaps stay within `gap`;
+  * a session ends `gap` after its last event.
   *
-  * Two equivalent paths:
-  *   - [[sessions]]: declarative `session_window` aggregation — works
-  *     identically in batch and streaming, one shuffle on (user, window),
-  *     map-side partial merge, state bounded by the watermark. Preferred
-  *     whenever the per-session result is an associative aggregate.
-  *   - [[stateful]]: `flatMapGroupsWithState` with event-time timeouts —
-  *     the explicit-state escape hatch for session logic that an
-  *     aggregate cannot express (emit-on-close semantics, per-session
-  *     sequences, custom eviction). State is one small record per OPEN
-  *     session; the event-time timeout (watermark-driven) closes idle
-  *     sessions, so state size is bounded by concurrently-active users —
-  *     the property that keeps this safe at cluster scale.
-  *
-  * Both emit the same vocabulary: session_start/end in epoch micros
-  * (end = last event + gap, matching Spark's session_window bound),
-  * event count, value total.
+  * One declarative `session_window` aggregation, identical in batch and
+  * streaming: one shuffle on (user, window), map-side partial merge, and
+  * state bounded by the watermark when the input is a watermarked stream.
+  * It emits session_start/end in epoch micros (end = last event + gap,
+  * Spark's session_window bound), the event count and the value total.
   */
 object Sessionize {
-
-  /** One closed session. */
-  final case class Session(
-      user_id: Long, session_start_us: Long, session_end_us: Long,
-      n_events: Long, total_value: Double)
-
-  /** The open-session state carried between micro-batches. */
-  final case class OpenSession(
-      startUs: Long, lastUs: Long, n: Long, total: Double)
 
   /** Declarative sessions via `session_window` (batch or streaming —
     * pass a watermarked stream for the latter). */
@@ -51,74 +27,4 @@ object Sessionize {
         unix_micros(col("sw.start")).as("session_start_us"),
         unix_micros(col("sw.end")).as("session_end_us"),
         col("n_events"), col("total_value"))
-
-  private def us(t: Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-
-  /** Custom-state sessions: emits each session exactly once, when it
-    * CLOSES (a later event opens a new one, or the event-time timeout
-    * fires once the watermark passes last-event + gap). The watermark is
-    * applied here, after the projection — casts create fresh attributes,
-    * so a watermark tagged upstream would not survive them. */
-  def stateful(events: DataFrame, tsCol: String, userCol: String,
-               valueCol: String, gapMinutes: Int = 30,
-               watermarkDelay: String = "0 seconds"): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    val gapMs = gapMinutes * 60L * 1000L
-
-    def close(user: Long, s: OpenSession): Session =
-      Session(user, s.startUs, s.lastUs + gapUs, s.n, s.total)
-
-    events
-      .select(col(userCol).cast("long").as("__user"),
-        col(tsCol).cast("timestamp").as("__ts"),
-        col(valueCol).cast("double").as("__value"))
-      .withWatermark("__ts", watermarkDelay)
-      .as[(Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSession, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, it: Iterator[(Long, Timestamp, Double)],
-         state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            // watermark passed last-event + gap with no new data: close
-            val out = close(user, state.get)
-            state.remove()
-            Iterator.single(out)
-          } else {
-            val closed = scala.collection.mutable.ListBuffer.empty[Session]
-            var cur = state.getOption
-            // micro-batches deliver a group's rows unordered: restore
-            // event-time order so gap decisions are deterministic
-            it.toSeq.sortBy(e => (us(e._2), e._3)).foreach { case (_, t, v) =>
-              val ts = us(t)
-              cur match {
-                case None =>
-                  cur = Some(OpenSession(ts, ts, 1L, v))
-                case Some(s) if ts - s.lastUs <= gapUs =>
-                  cur = Some(OpenSession(s.startUs, math.max(s.lastUs, ts),
-                    s.n + 1, s.total + v))
-                case Some(s) =>
-                  closed += close(user, s)
-                  cur = Some(OpenSession(ts, ts, 1L, v))
-              }
-            }
-            cur.foreach { s =>
-              val timeoutMs = s.lastUs / 1000L + gapMs
-              if (timeoutMs <= state.getCurrentWatermarkMs()) {
-                // already expired relative to the watermark — close now
-                // (setTimeoutTimestamp would reject a past timestamp)
-                closed += close(user, s)
-                state.remove()
-              } else {
-                state.update(s)
-                state.setTimeoutTimestamp(timeoutMs)
-              }
-            }
-            closed.iterator
-          }
-      }
-  }
 }

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import graft.sinks.{InMemoryKvSink, JsonDocStore, KvSink}
-import graft.sources.KvScan
 import graft.sources.udbf.UdbfWriter
 import graft.sources.udbf.UdbfWriter.ChannelSpec
 import org.apache.spark.ListenerBusDrain
@@ -12,12 +11,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions._
 
-/** The SENS / MIST / LPI / Event app flows plus the S6 KV scan. */
+/** The SENS / MIST / LPI / Event app flows. */
 class AppsSpec extends SparkSpec {
   import testImplicits._
 
   test("SENS: parquet latest-row by first-column timestamp → KV pairs") {
-    val dir = Files.createTempDirectory("sens")
+    val dir = tempDir("sens")
     val f = dir.resolve("sens_2024-03-15_12-00-00.parquet").toString
     Seq(
       ("2024-03-15 11:00:00", 1.5, "a"),
@@ -36,7 +35,7 @@ class AppsSpec extends SparkSpec {
   }
 
   test("SENS: no parsable timestamps falls back to physical last row; null → empty") {
-    val dir = Files.createTempDirectory("sens2")
+    val dir = tempDir("sens2")
     val f = dir.resolve("plain.csv")
     Files.writeString(f, "name,score\nx,1\ny,\nz,3\n")
     val kv = new InMemoryKvSink()
@@ -48,7 +47,7 @@ class AppsSpec extends SparkSpec {
   }
 
   test("SENS: empty file and bad suffix fail like the reference") {
-    val dir = Files.createTempDirectory("sens3")
+    val dir = tempDir("sens3")
     val empty = dir.resolve("empty.csv")
     Files.writeString(empty, "a,b\n")
     val kv = new InMemoryKvSink()
@@ -59,8 +58,8 @@ class AppsSpec extends SparkSpec {
   }
 
   test("MIST: CSV numeric channels → stats CSV + KV (real pipeline, not the stub)") {
-    val dir = Files.createTempDirectory("mist")
-    val stats = Files.createTempDirectory("mist_stats")
+    val dir = tempDir("mist")
+    val stats = tempDir("mist_stats")
     val f = dir.resolve("ae_2024-03-15_12-00-00.csv")
     Files.writeString(f,
       "sensor_name,amplitude,counts\nA,10.0,5\nA,20.0,7\nB,30.0,9\n")
@@ -89,8 +88,8 @@ class AppsSpec extends SparkSpec {
   }
 
   test("LPI: a cut file runs one Spark execution and as many jobs as an aligned file") {
-    val dir = Files.createTempDirectory("lpi_execs")
-    val stats = Files.createTempDirectory("lpi_execs_stats")
+    val dir = tempDir("lpi_execs")
+    val stats = tempDir("lpi_execs_stats")
     val (aligned, cut) = alignedAndCut(dir)
     val kv = new InMemoryKvSink()
     val lpi = new LpiAnalysis(spark, stats.toString, kv)
@@ -129,8 +128,8 @@ class AppsSpec extends SparkSpec {
   test("LPI and MIST: a one-file stats action runs one Spark job") {
     // one logger file is one input partition, so ChannelStats' partial
     // and final aggregates run in one task with no shuffle-map job
-    val dir = Files.createTempDirectory("one_job")
-    val stats = Files.createTempDirectory("one_job_stats")
+    val dir = tempDir("one_job")
+    val stats = tempDir("one_job_stats")
     val (aligned, cut) = alignedAndCut(dir)
     val kv = new InMemoryKvSink()
     val lpi = new LpiAnalysis(spark, stats.toString, kv)
@@ -168,8 +167,8 @@ class AppsSpec extends SparkSpec {
       override def hgetAll(key: String): Map[String, String] = store.hgetAll(key)
       override def scan(pattern: String): Seq[String] = store.scan(pattern)
     }
-    val dir = Files.createTempDirectory("ttl")
-    val stats = Files.createTempDirectory("ttl_stats").toString
+    val dir = tempDir("ttl")
+    val stats = tempDir("ttl_stats").toString
     val lpi = dir.resolve("fhe_1hz_2024-03-15_12-00-00.dat")
     UdbfWriter.write(lpi, Seq(ChannelSpec("ch_a", "V")), 20, (i, _) => i.toDouble,
       1710504000000000L, 1.0)
@@ -187,7 +186,7 @@ class AppsSpec extends SparkSpec {
   }
 
   test("Event: gate → fetch → validate → hash → dedup → idempotent store") {
-    val store = new JsonDocStore(Files.createTempDirectory("events"))
+    val store = new JsonDocStore(tempDir("events"))
     val urls = Seq(
       "https://meta.example/42",
       "https://meta.example/42", // duplicate URL → same event id
@@ -211,7 +210,7 @@ class AppsSpec extends SparkSpec {
   }
 
   test("Event: store enforces its per-batch cardinality contract (Bounded)") {
-    val store = new JsonDocStore(Files.createTempDirectory("events-bounded"))
+    val store = new JsonDocStore(tempDir("events-bounded"))
     val urls = (1 to 5).map(i => s"https://meta.example/$i").toDF("url")
     val out = EventAnalysis.ingest(spark, urls, "url", new EventAnalysis.FakeFetcher())
     val ex = intercept[IllegalStateException] {
@@ -230,18 +229,5 @@ class AppsSpec extends SparkSpec {
       Seq("https://meta.example/1").toDF("url"), "url", noDataUrl).collect()
     assert(!out.head.getBoolean(3))
     assert(out.head.getString(4).contains("data_url"))
-  }
-
-  test("S6: KvScan snapshots matching hashes as (key, field, value) rows") {
-    val kv = new InMemoryKvSink()
-    kv.hset("stats:f1", Map("a:mean" -> "1.0", "a:max" -> "2.0"), None)
-    kv.hset("stats:f2", Map("b:mean" -> "3.0"), None)
-    kv.set("health:x", "0", None)
-    val df = KvScan.scan(spark, kv, "stats:*")
-    assert(df.count() == 3)
-    assert(df.filter(col("key") === "stats:f1").count() == 2)
-    // joins work downstream (J1 shape)
-    val mapping = Seq(("a:mean", 100)).toDF("field", "register")
-    assert(df.join(broadcast(mapping), Seq("field")).count() == 1)
   }
 }

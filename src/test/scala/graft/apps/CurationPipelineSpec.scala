@@ -70,23 +70,17 @@ class CurationPipelineSpec extends SparkSpec {
     // preemptible-cluster configuration: rounds persist to the reliable
     // checkpoint dir instead of executor-local blocks; output must be
     // identical to the default path
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt")
-    try {
-      spark.sparkContext.setCheckpointDir(dir.toString)
-      val reliable = CurationPipeline.curate(corpus, samplePerLang = 10,
-          checkpoint = _.checkpoint(eager = false))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-      val default = CurationPipeline.curate(corpus, samplePerLang = 10)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-      assert(reliable == default)
-      // the reliable run actually wrote round state to the checkpoint dir
-      val wrote = java.nio.file.Files.walk(dir).filter(_.toFile.isFile).count()
-      assert(wrote > 0, "reliable checkpoint dir is empty — knob not wired")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    val dir = tempDir("graft-cc-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    val reliable = CurationPipeline.curate(corpus, samplePerLang = 10,
+        checkpoint = _.checkpoint(eager = false))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    val default = CurationPipeline.curate(corpus, samplePerLang = 10)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    assert(reliable == default)
+    // the reliable run actually wrote round state to the checkpoint dir
+    val wrote = java.nio.file.Files.walk(dir).filter(_.toFile.isFile).count()
+    assert(wrote > 0, "reliable checkpoint dir is empty — knob not wired")
   }
 
   // ---- crawl pre-pass (t67): extract -> normalize -> line scrub ----

@@ -1,6 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDateTime
 
@@ -20,7 +19,7 @@ class TablesSpec extends SparkSpec {
   import testImplicits._
 
   private def tmpSfDir(): String =
-    Files.createTempDirectory("graft_tables").toString
+    tempDir("graft_tables").toString
 
   test("NTZ parquet (naive micros) normalizes to UTC TimestampType, value-identical") {
     val dir = tmpSfDir()

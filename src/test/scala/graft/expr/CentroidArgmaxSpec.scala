@@ -22,7 +22,7 @@ class CentroidArgmaxSpec extends SparkSpec {
       typedLit(cb.flatten), lit(cb.length))
 
   test("matches the composed chain on a random-ish corpus (parquet source)") {
-    val dir = java.nio.file.Files.createTempDirectory("cas").toString
+    val dir = tempDir("cas").toString
     spark.range(3000).select(col("id"),
         transform(sequence(lit(0), lit(7)),
           d => ((col("id") * 31 + d * 17) % 97).cast("float") - 48f)
@@ -66,7 +66,7 @@ class CentroidArgmaxSpec extends SparkSpec {
   }
 
   test("kernel codegen emits the static call (no interpreted fallback)") {
-    val dir = java.nio.file.Files.createTempDirectory("cas2").toString
+    val dir = tempDir("cas2").toString
     spark.range(100).select(col("id"),
         array(lit(1.0f), lit(2.0f)).as("vec"))
       .write.mode("overwrite").parquet(dir)

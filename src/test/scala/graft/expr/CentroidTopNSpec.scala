@@ -33,7 +33,7 @@ class CentroidTopNSpec extends SparkSpec {
       typedLit(cb.flatten), lit(cb.length), lit(n))
 
   test("matches the composed ranking on a random-ish corpus (parquet source)") {
-    val dir = java.nio.file.Files.createTempDirectory("ctn").toString
+    val dir = tempDir("ctn").toString
     spark.range(3000).select(col("id"),
         transform(sequence(lit(0), lit(7)),
           d => ((col("id") * 31 + d * 17) % 97).cast("float") - 48f)
@@ -117,7 +117,7 @@ class CentroidTopNSpec extends SparkSpec {
   }
 
   test("codegen emits the static call, and interpreted eval agrees with it") {
-    val dir = java.nio.file.Files.createTempDirectory("ctn2").toString
+    val dir = tempDir("ctn2").toString
     spark.range(100).select(col("id"),
         transform(sequence(lit(0), lit(3)),
           d => ((col("id") * 7 + d * 3) % 11).cast("float") - 5f).as("vec"))

@@ -104,7 +104,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   private def mediaQuery(name: String, rows: Seq[(Long, String)]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media").toString
+    val dir = tempDir("graft_media").toString
     rows.map { case (id, text) => (id, text, "en", "src", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -14,7 +12,7 @@ class AnnIndexSpec extends SparkSpec {
   private def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   test("index queries read only the probe partitions (partition pruning)") {
-    val path = Files.createTempDirectory("ann_idx").toString + "/index"
+    val path = tempDir("ann_idx").toString + "/index"
     AnnIndex.build(embeddings, "vec_id", "embedding", dims = 64, path,
       bits = 4, tables = 2)
     val qvec = embeddings.filter(col("vec_id") === 0)
@@ -44,7 +42,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("multi-probe widens the candidate set and stays partition-pruned") {
-    val path = Files.createTempDirectory("ann_idx3").toString + "/index"
+    val path = tempDir("ann_idx3").toString + "/index"
     AnnIndex.build(embeddings, "vec_id", "embedding", dims = 64, path,
       bits = 8, tables = 2)
     val qvec = embeddings.filter(col("vec_id") === 0)
@@ -59,7 +57,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("index top-k agrees with brute force on the candidate set") {
-    val path = Files.createTempDirectory("ann_idx2").toString + "/index"
+    val path = tempDir("ann_idx2").toString + "/index"
     AnnIndex.build(embeddings, "vec_id", "embedding", dims = 64, path,
       bits = 4, tables = 4)
     val qvec = embeddings.filter(col("vec_id") === 0)

@@ -43,7 +43,7 @@ class ClusteredLayoutSpec extends SparkSpec {
   }
 
   private def checkClustered(useHilbert: Boolean): Unit = {
-    val base = Files.createTempDirectory("layout").toString
+    val base = tempDir("layout").toString
     val clustered = s"$base/clustered"
     val flat = s"$base/flat"
     val layout = Layout.clusteredWrite(points, "x", "y", clustered,
@@ -92,7 +92,7 @@ class ClusteredLayoutSpec extends SparkSpec {
   }
 
   test("row groups cover tight curve ranges: _zv is sorted within every file") {
-    val base = Files.createTempDirectory("layout_sorted").toString
+    val base = tempDir("layout_sorted").toString
     Layout.clusteredWrite(points, "x", "y", s"$base/t", bits = 8, partBits = 4)
     val perFile = spark.read.parquet(s"$base/t")
       .select(col("_zv"), input_file_name().as("f"))
@@ -111,7 +111,7 @@ class ClusteredLayoutSpec extends SparkSpec {
   }
 
   test("readLayout restores the persisted metadata bit-for-bit; pruning works cross-session") {
-    val base = Files.createTempDirectory("layout_meta").toString
+    val base = tempDir("layout_meta").toString
     val written = Layout.clusteredWrite(points, "x", "y", s"$base/t",
       useHilbert = true, bits = 8, partBits = 4)
     val restored = Layout.readLayout(s"$base/t")
@@ -127,7 +127,7 @@ class ClusteredLayoutSpec extends SparkSpec {
     // the metadata file is invisible to the parquet scan
     assert(spark.read.parquet(s"$base/t").count() === 40000L)
     intercept[IllegalArgumentException] {
-      Layout.readLayout(Files.createTempDirectory("not_a_table").toString)
+      Layout.readLayout(tempDir("not_a_table").toString)
     }
   }
 
@@ -162,7 +162,7 @@ class ClusteredLayoutSpec extends SparkSpec {
     // 4^16 = 4.3e9 cells — the cell walk is unusable here; the range
     // decomposition enumerates the same partitions from O(perimeter)
     // quadrants. Full write/read cycle at the finer resolution:
-    val base = Files.createTempDirectory("layout16").toString
+    val base = tempDir("layout16").toString
     val layout = Layout.clusteredWrite(points, "x", "y", s"$base/t",
       useHilbert = true, bits = 16, partBits = 5)
     val t0 = System.nanoTime()
@@ -183,11 +183,11 @@ class ClusteredLayoutSpec extends SparkSpec {
   test("clusteredWrite rejects reserved columns and degenerate inputs") {
     intercept[IllegalArgumentException] {
       Layout.clusteredWrite(points.withColumn("_zv", lit(1L)), "x", "y",
-        Files.createTempDirectory("bad").toString + "/t")
+        tempDir("bad").toString + "/t")
     }
     intercept[IllegalArgumentException] {
       Layout.clusteredWrite(points.where(lit(false)), "x", "y",
-        Files.createTempDirectory("empty").toString + "/t")
+        tempDir("empty").toString + "/t")
     }
   }
 }

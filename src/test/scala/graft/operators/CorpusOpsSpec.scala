@@ -14,7 +14,7 @@ class CorpusOpsSpec extends SparkSpec {
   import testImplicits._
 
   private def runQuery(name: String, rows: Seq[(Long, String, String)]): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_corpus").toString
+    val dir = tempDir("graft_corpus").toString
     rows.map { case (id, src, text) => (id, text, "en", src, text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

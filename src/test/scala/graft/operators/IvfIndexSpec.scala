@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -25,7 +23,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("index queries read only the probed partitions and match brute force") {
-    val path = Files.createTempDirectory("ivf_idx").toString + "/index"
+    val path = tempDir("ivf_idx").toString + "/index"
     IvfIndex.build(embeddings, "vec_id", "embedding", dims = 64, path,
       k = 8, iters = 3)
     val qvec = embeddings.filter(col("vec_id") === 0)
@@ -63,7 +61,7 @@ class IvfIndexSpec extends SparkSpec {
       .unionAll(embeddings.select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"),
           (x, i) => when(i === 0, x + lit(0.05f)).otherwise(x)).as("embedding")))
-    val path = Files.createTempDirectory("ivf_idx2").toString + "/index"
+    val path = tempDir("ivf_idx2").toString + "/index"
     IvfIndex.build(planted, "vec_id", "embedding", dims = 64, path,
       k = 8, iters = 3)
     val qvec = embeddings.filter(col("vec_id") === 7)

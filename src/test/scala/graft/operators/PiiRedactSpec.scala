@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -103,8 +101,8 @@ class PiiRedactSpec extends SparkSpec {
     // PiiRedact is pure column arithmetic, so it rides the streaming
     // plan unchanged — redaction before admission means PII never
     // reaches dedup state or the sink
-    val dir = Files.createTempDirectory("spii_src").toString
-    val ckpt = Files.createTempDirectory("spii_ckpt").toString
+    val dir = tempDir("spii_src").toString
+    val ckpt = tempDir("spii_ckpt").toString
     writeDocs(dir, 1, Seq(
       ("2024-03-15 12:00:00", 1L, "contact me at alice@example.com or 10.1.2.3"),
       ("2024-03-15 12:00:05", 2L, "nothing sensitive in this one")))

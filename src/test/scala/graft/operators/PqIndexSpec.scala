@@ -106,7 +106,7 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("kernels run inside WholeStageCodegen (parquet-sourced plan)") {
-    val dir = java.nio.file.Files.createTempDirectory("pqspec").toString
+    val dir = tempDir("pqspec").toString
     corpus.write.mode("overwrite").parquet(dir)
     val fromDisk = spark.read.parquet(dir)
     val cb = PqIndex.train(fromDisk, "vec_id", "embedding", dims, m = 4, k = 8)

@@ -99,7 +99,7 @@ class WebhookGateSpec extends SparkSpec {
       ("+Infinity", false), ("-INF", false),          // Jackson-only spellings
       ("""{"v": +INF}""", false),
       ("", false), ("not json", false), ("{", false), ("{}{}", false))
-    val dir = java.nio.file.Files.createTempDirectory("whg_json").toString
+    val dir = tempDir("whg_json").toString
     cases.map(_._1).toDF("b").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
       .select(col("b"), call_function("graft_json_strict", col("b")).as("ok"))
@@ -141,8 +141,8 @@ class WebhookGateSpec extends SparkSpec {
 
   test("the gate is stream-safe: pure projection over a readStream, no state") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("whg_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("whg_ckpt").toString
+    val dir = tempDir("whg_src").toString
+    val ckpt = tempDir("whg_ckpt").toString
     val body = """{"ok": 1}"""
     Seq(
       (1L, body, javaHmac(Secret, body), Secret, "application/json"),

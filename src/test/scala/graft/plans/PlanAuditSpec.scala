@@ -427,7 +427,7 @@ class PlanAuditSpec extends SparkSpec {
     * channel j of frame i holds `i + 10 * j` in the first file and 100
     * more in the second. */
   private def twoLoggerFiles(): (java.nio.file.Path, java.nio.file.Path) = {
-    val dir = java.nio.file.Files.createTempDirectory("plan_udbf")
+    val dir = tempDir("plan_udbf")
     val chans = Seq(ChannelSpec("ch_a", "V"), ChannelSpec("ch_b", "V"))
     val first = dir.resolve("fhe_1hz_2024-03-15_12-00-00.dat")
     UdbfWriter.write(first, chans, 100, (i, j) => (i + 10 * j).toDouble,

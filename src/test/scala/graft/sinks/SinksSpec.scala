@@ -33,7 +33,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("K1: CsvSink.write produces one exact file, not a directory") {
-    val dir = Files.createTempDirectory("csv_sink")
+    val dir = tempDir("csv_sink")
     val target = dir.resolve("out_stats.csv")
     val header = Seq("Sensor", "Mean")
     CsvSink.write(target, header, Seq(Row("s1", 1.5), Row("s2", 2.0)))
@@ -74,7 +74,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("K6: JSON doc store is atomic, idempotent, and tracks latest") {
-    val store = new JsonDocStore(Files.createTempDirectory("json_store"))
+    val store = new JsonDocStore(tempDir("json_store"))
     assert(store.store("abc123", """{"v":1}"""))
     assert(!store.store("abc123", """{"v":2}""")) // D4 idempotent skip
     assert(store.get("abc123").contains("""{"v":1}"""))
@@ -84,7 +84,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("K6: latest falls back to newest event file when pointer is missing") {
-    val dir = Files.createTempDirectory("json_store2")
+    val dir = tempDir("json_store2")
     val store = new JsonDocStore(dir)
     store.store("a", """{"n":1}"""); store.store("b", """{"n":2}""")
     Files.delete(dir.resolve("latest.json"))

@@ -11,8 +11,8 @@ class UploadSinkSpec extends SparkSpec {
   import UploadSink._
 
   private def setup() = {
-    val fin = Files.createTempDirectory("up_fin")
-    val rem = Files.createTempDirectory("up_rem")
+    val fin = tempDir("up_fin")
+    val rem = tempDir("up_rem")
     (fin, rem, new LocalDirStore(rem))
   }
 

@@ -62,7 +62,7 @@ class SensicalSpec extends SparkSpec {
   }
 
   test("reports() and cracks() read a directory of files distributively") {
-    val dir = Files.createTempDirectory("sensical_spec").toString
+    val dir = tempDir("sensical_spec").toString
     Files.writeString(Paths.get(dir, "a.txt"), SensicalFixtures.ReportText)
     Files.writeString(Paths.get(dir, "b.txt"),
       SensicalFixtures.ReportText.replace("Sensor Nord", "Sensor Sued"))

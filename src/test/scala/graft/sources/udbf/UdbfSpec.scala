@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DoubleType, TimestampType}
 class UdbfSpec extends SparkSpec {
   import UdbfWriter.ChannelSpec
 
-  private def tmpDir = Files.createTempDirectory("udbf_spec").toString
+  private def tmpDir = tempDir("udbf_spec").toString
 
   test("schema: ts TIMESTAMP + DOUBLE channels with unit metadata, names normalized") {
     val f = UdbfFixtures.ensure(tmpDir)

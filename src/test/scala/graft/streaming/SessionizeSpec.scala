@@ -1,26 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** T6 custom stateful streaming: gap-based sessions via
-  * flatMapGroupsWithState with event-time timeouts, checked against the
-  * declarative session_window path on identical data. */
+/** Gap-based sessions via `session_window` (the q21 path). */
 class SessionizeSpec extends SparkSpec {
   import testImplicits._
-
-  private val schema = StructType(Seq(
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("value", DoubleType)))
-
-  private def writeBatch(dir: String, n: Int, rows: Seq[(String, Long, Double)]): Unit =
-    rows.toDF("ts_s", "user_id", "value")
-      .select(to_timestamp(col("ts_s")).as("ts"), col("user_id"), col("value"))
-      .coalesce(1).write.parquet(s"$dir/batch$n")
 
   test("batch sessions: session_window splits on gap > 30 minutes, end = last + gap") {
     val df = Seq(
@@ -39,83 +24,5 @@ class SessionizeSpec extends SparkSpec {
     assert(s1.getLong(3) == 2 && s1.getDouble(4) == 3.0)
     assert(out(1).getLong(3) == 1 && out(1).getDouble(4) == 4.0)
     assert(out(2).getLong(0) == 2L)
-  }
-
-  test("stateful sessions emit exactly on close (gap break or event-time timeout)") {
-    val dir = Files.createTempDirectory("sess_src").toString
-    val ckpt = Files.createTempDirectory("sess_ckpt").toString
-    writeBatch(dir, 1, Seq(
-      ("2024-03-15 12:00:00", 1L, 1.0),
-      ("2024-03-15 12:20:00", 1L, 2.0),
-      ("2024-03-15 12:05:00", 2L, 8.0)))
-
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/*")
-    val sessions = Sessionize.stateful(stream, "ts", "user_id", "value",
-      gapMinutes = 30)
-
-    val q = sessions.toDF().writeStream.format("memory")
-      .queryName("sess_out").outputMode("append")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      q.processAllAvailable()
-      // nothing closed yet: both sessions still open, watermark at 12:20
-      assert(spark.table("sess_out").isEmpty)
-
-      // user 1 returns after a 70-min gap -> closes their first session;
-      // the watermark advance (13:30) also passes user 2's timeout (12:35)
-      writeBatch(dir, 2, Seq(("2024-03-15 13:30:00", 1L, 4.0)))
-      q.processAllAvailable()
-      // a further batch lets the timeout fire against the new watermark
-      writeBatch(dir, 3, Seq(("2024-03-15 13:40:00", 3L, 0.5)))
-      q.processAllAvailable()
-
-      val closed = spark.table("sess_out")
-        .orderBy("user_id", "session_start_us").collect()
-      assert(closed.length == 2, s"expected 2 closed sessions, got ${closed.length}")
-      val u1 = closed(0)
-      assert(u1.getLong(0) == 1L && u1.getLong(3) == 2 && u1.getDouble(4) == 3.0)
-      val u2 = closed(1)
-      assert(u2.getLong(0) == 2L && u2.getLong(3) == 1 && u2.getDouble(4) == 8.0)
-
-      // closed sessions agree with the declarative session_window result
-      // on the same (closed) slice of data
-      val batch = spark.read.schema(schema).parquet(s"$dir/*")
-        .filter(col("user_id").isin(1L, 2L))
-      val declarative = Sessionize.sessions(batch, "ts", "user_id", "value")
-        .filter(col("session_end_us") <= lit(
-          java.time.Instant.parse("2024-03-15T13:40:00Z").toEpochMilli * 1000))
-        .orderBy("user_id", "session_start_us").collect()
-      assert(declarative.length == 2)
-      declarative.zip(closed).foreach { case (d, c) =>
-        assert(d.getLong(0) == c.getLong(0))
-        assert(d.getLong(1) == c.getLong(1))
-        assert(d.getLong(2) == c.getLong(2))
-        assert(d.getLong(3) == c.getLong(3))
-        assert(d.getDouble(4) == c.getDouble(4))
-      }
-    } finally q.stop()
-  }
-
-  test("stateful sessionizer state is one record per open session (bounded state)") {
-    val dir = Files.createTempDirectory("sessb_src").toString
-    val ckpt = Files.createTempDirectory("sessb_ckpt").toString
-    // 50 users, one event each: 50 open sessions, nothing closes
-    writeBatch(dir, 1, (1L to 50L).map(u => ("2024-03-15 12:00:00", u, 1.0)))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(s"$dir/*")
-    val q = Sessionize.stateful(stream, "ts", "user_id", "value")
-      .toDF().writeStream.format("memory").queryName("sessb_out")
-      .outputMode("append").option("checkpointLocation", ckpt).start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("sessb_out").isEmpty)
-      val progress = q.lastProgress
-      val stateRows = progress.stateOperators(0).numRowsTotal
-      assert(stateRows == 50, s"expected 50 open-session state rows, got $stateRows")
-    } finally q.stop()
   }
 }

@@ -22,8 +22,6 @@ import graft.sources.udbf.UdbfWriter.ChannelSpec
   * dead-letter, and the end-to-end LPI spine (Pipeline.py semantics). */
 class StreamingSpec extends SparkSpec {
 
-  private def tmp(prefix: String): Path = Files.createTempDirectory(prefix)
-
   /** Gate with a controllable clock, starting at the real now. */
   private def gateWith(input: Path, staging: Path,
       stableChecks: Int = graft.core.GraftConfig.stableChecks)
@@ -39,7 +37,7 @@ class StreamingSpec extends SparkSpec {
     staged.getFileName.toString == name && staged.startsWith(staging)
 
   test("T2: an in-flight file is refused until stable and aged") {
-    val input = tmp("gate_in"); val staging = tmp("gate_stage")
+    val input = tempDir("gate_in"); val staging = tempDir("gate_stage")
     val (gate, age) = gateWith(input, staging)
     val f = input.resolve("a_100hz_2024-03-15_12-00-00.dat")
     Files.write(f, Array[Byte](1, 2, 3))
@@ -54,7 +52,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T2: modification resets the stability count") {
-    val input = tmp("gate_in2"); val staging = tmp("gate_stage2")
+    val input = tempDir("gate_in2"); val staging = tempDir("gate_stage2")
     var offset = 0L
     val gate = new StabilityGate(input, staging, stableChecks = 2,
       clock = () => System.currentTimeMillis + offset)
@@ -72,7 +70,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T2: a file that vanished between polls starts its stability count over") {
-    val input = tmp("gate_in5"); val staging = tmp("gate_stage5")
+    val input = tempDir("gate_in5"); val staging = tempDir("gate_stage5")
     val (gate, age) = gateWith(input, staging, stableChecks = 2)
     val f = input.resolve("v_100hz_2024-03-15_12-00-00.dat")
     Files.write(f, Array[Byte](1, 2, 3))
@@ -92,14 +90,14 @@ class StreamingSpec extends SparkSpec {
     val fdDir = Paths.get("/proc/self/fd")
     assume(Files.isDirectory(fdDir), "needs /proc/self/fd to count open descriptors")
     def openFds(): Long = Using.resource(Files.list(fdDir))(_.count())
-    val input = tmp("fd_in"); val staging = tmp("fd_stage")
-    val finished = tmp("fd_fin"); val remote = tmp("fd_remote")
+    val input = tempDir("fd_in"); val staging = tempDir("fd_stage")
+    val finished = tempDir("fd_fin"); val remote = tempDir("fd_remote")
     Files.write(input.resolve("young_2024-03-15_12-00-00.dat"), Array[Byte](1))
     Files.write(finished.resolve("done.dat"), Array[Byte](1))
     val gate = new StabilityGate(input, staging) // never ages: nothing admitted
     val sink = new UploadSink(finished, new UploadSink.LocalDirStore(remote),
       settle = () => ())
-    val docs = new JsonDocStore(tmp("fd_docs")) // no latest.json: both list
+    val docs = new JsonDocStore(tempDir("fd_docs")) // no latest.json: both list
     val before = openFds()
     (1 to 300).foreach { _ => gate.poll(); sink.sweep(); docs.ids(); docs.latest() }
     System.gc()
@@ -108,7 +106,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T3: stable candidates are admitted oldest-filename-timestamp first") {
-    val input = tmp("gate_in3"); val staging = tmp("gate_stage3")
+    val input = tempDir("gate_in3"); val staging = tempDir("gate_stage3")
     val (gate, age) = gateWith(input, staging)
     Seq("c_2024-03-15_12-20-00.dat", "a_2024-03-15_12-00-00.dat",
       "b_2024-03-15_12-10-00.dat").foreach { n =>
@@ -121,7 +119,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T3: unparsable filename falls back to mtime ordering") {
-    val input = tmp("gate_in4"); val staging = tmp("gate_stage4")
+    val input = tempDir("gate_in4"); val staging = tempDir("gate_stage4")
     val (gate, age) = gateWith(input, staging)
     val young = input.resolve("no-timestamp-young.bin")
     val old = input.resolve("no-timestamp-old.bin")
@@ -134,8 +132,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T7: processOne archives on success, dead-letters on failure, sets health") {
-    val staging = tmp("pl_stage"); val finished = tmp("pl_fin")
-    val failed = tmp("pl_fail"); val ckpt = tmp("pl_ckpt")
+    val staging = tempDir("pl_stage"); val finished = tempDir("pl_fin")
+    val failed = tempDir("pl_fail"); val ckpt = tempDir("pl_ckpt")
     val kv = new InMemoryKvSink()
     val pipeline = new FilePipeline(spark, "t7", staging.toString,
       finished.toString, failed.toString, ckpt.toString, kv,
@@ -195,9 +193,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("E2E: gate → stream → udbf decode → stats CSV + KV → archive; corrupt file dead-letters") {
-    val input = tmp("e2e_in"); val staging = tmp("e2e_stage")
-    val finished = tmp("e2e_fin"); val failed = tmp("e2e_fail")
-    val stats = tmp("e2e_stats"); val ckpt = tmp("e2e_ckpt")
+    val input = tempDir("e2e_in"); val staging = tempDir("e2e_stage")
+    val finished = tempDir("e2e_fin"); val failed = tempDir("e2e_fail")
+    val stats = tempDir("e2e_stats"); val ckpt = tempDir("e2e_ckpt")
 
     val chans = Seq(ChannelSpec("ch_a", "µm/m"), ChannelSpec("ch_b", "°C"),
       ChannelSpec("ch_c", "V"))
@@ -318,13 +316,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("D1: a file re-delivered under a processed name runs again; staging ends empty") {
-    val input = tmp("redo_in"); val staging = tmp("redo_stage")
-    val finished = tmp("redo_fin"); val failed = tmp("redo_fail")
+    val input = tempDir("redo_in"); val staging = tempDir("redo_stage")
+    val finished = tempDir("redo_fin"); val failed = tempDir("redo_fail")
     val (gate, age) = gateWith(input, staging, stableChecks = 1)
     val name = "a_2024-03-15_12-00-00.dat"
     val seen = mutable.ArrayBuffer.empty[String]
     val pipeline = new FilePipeline(spark, "redo", staging.toString,
-      finished.toString, failed.toString, tmp("redo_ckpt").toString, new InMemoryKvSink(),
+      finished.toString, failed.toString, tempDir("redo_ckpt").toString, new InMemoryKvSink(),
       process = p => seen.synchronized(seen += Files.readString(Paths.get(p))))
     // stage, run, stop; the second delivery restarts from the checkpoint
     def deliver(content: String): Unit = {
@@ -345,7 +343,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.spark.sql.execution.streaming.checkpointing.{
       CheckpointFileManager, FileSystemBasedCheckpointFileManager}
-    val dir = tmp("ckpt_fm")
+    val dir = tempDir("ckpt_fm")
     val fm = CheckpointFileManager.create(new HPath(dir.toUri),
       spark.sessionState.newHadoopConf())
     assert(fm.isInstanceOf[FileSystemBasedCheckpointFileManager], fm.getClass.getName)
@@ -369,8 +367,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("E2E: the SENS flow runs under the same streaming driver") {
-    val staging = tmp("sens_stage"); val finished = tmp("sens_fin")
-    val failed = tmp("sens_fail"); val ckpt = tmp("sens_ckpt")
+    val staging = tempDir("sens_stage"); val finished = tempDir("sens_fin")
+    val failed = tempDir("sens_fail"); val ckpt = tempDir("sens_ckpt")
     Files.writeString(staging.resolve("probe_2024-03-15_12-00-00.csv"),
       "stamp,reading\n2024-03-15 11:00:00,1.5\n2024-03-15 12:00:00,2.5\n")
     val kv = new InMemoryKvSink()

@@ -4,7 +4,7 @@
 # showed the rerun-then-taint path working end-to-end). Plants a
 # saturating external co-load (one busy-loop per CPU), runs a small
 # Bench subset against it, and asserts the emitted record carries a
-# non-empty `tainted` list. Artifact: TAINT_r17.json.
+# non-empty `tainted` list. Artifact: history/TAINT_r17.json.
 #
 # usage: tools/taint_exercise.sh [outFile]
 set -u
