@@ -41,7 +41,7 @@ final class LpiAnalysis(
     val p = Paths.get(file)
     val name = p.getFileName.toString
     require(name.toLowerCase.endsWith(".dat"), s"Called on non-.dat file: $file") // F1
-    val stem = name.stripSuffix(".dat").stripSuffix(".DAT")
+    val stem = name.substring(0, name.lastIndexOf('.')) // Path.stem, as SENS and MIST cut it
     val aligned = isAligned(name)
 
     // F3 + F7 — size-band health, keyed by the filename's sample rate;

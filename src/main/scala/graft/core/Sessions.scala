@@ -67,9 +67,8 @@ object Sessions {
     * The default FileContext manager sets the file permission on every
     * create, and without Hadoop's native library the local file system
     * does that by starting a `chmod` process. Each micro-batch creates
-    * three checkpoint files (`sources/0/<n>`, `offsets/<n>`,
-    * `commits/<n>`), so the default costs three process starts per
-    * logger file. `FileSystem.create` sets no permission. On a local
+    * two checkpoint files (`offsets/<n>`, `commits/<n>`), so the default
+    * costs two process starts per logger file. `FileSystem.create` sets no permission. On a local
     * disk both managers write a temp file and rename it after an
     * existence check, refuse a non-overwriting create onto an existing
     * file, and skip fsync. One difference: an overwriting create, which

@@ -15,6 +15,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** S1 — `spark.read.format("udbf")`: DataSource V2 reader for Gantner
   * UDBF `.dat` logger files (SURVEY.md §2.1 S1).
@@ -62,7 +63,7 @@ object UdbfDataSource {
   /** Expand the `path`/`paths` options to concrete `.dat` files (glob +
     * one-level directory listing), driver-side. */
   def resolveFiles(options: CaseInsensitiveStringMap): Seq[String] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val conf = sessionConf()
     val raw: Seq[String] = Option(options.get("paths")) match {
       case Some(json) => "\"((?:[^\"\\\\]|\\\\.)*)\"".r
         .findAllMatchIn(json).map(_.group(1)).toSeq
@@ -88,7 +89,7 @@ object UdbfDataSource {
     * field metadata (SURVEY.md §1.1: StructType metadata carries what the
     * reference keeps in parallel lists). */
   def schemaOf(file: String): StructType = {
-    val header = UdbfFormat.parseHeader(readBytes(file, new Configuration()))
+    val header = UdbfFormat.parseHeader(readBytes(file, sessionConf()))
     val tsMeta = new MetadataBuilder()
       .putDouble("sample_rate", header.sampleRate)
       .putString("vendor", header.vendor)
@@ -108,9 +109,13 @@ object UdbfDataSource {
     * with no Spark job; None for a file with no frames. Frames are
     * monotone, so this is the file's `min(ts)`. */
   def firstFrameMicros(file: String): Option[Long] = {
-    val cursor = new UdbfCursor(file, Array.empty, DefaultChunkFrames)
+    val cursor = new UdbfCursor(file, Array.empty, DefaultChunkFrames, sessionConf())
     if (cursor.advance()) Some(cursor.currentMicros) else None
   }
+
+  /** The session's Hadoop configuration, for every file access. */
+  private[udbf] def sessionConf(): Configuration =
+    SparkSession.active.sessionState.newHadoopConf()
 
   /** P5 — channel-name normalization, as applied by the reference
     * immediately after header read (DataConverterUDBF.py:104). */
@@ -164,23 +169,25 @@ final class UdbfScan(options: CaseInsensitiveStringMap, required: StructType,
   override def planInputPartitions(): Array[InputPartition] =
     files.map(UdbfInputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new UdbfReaderFactory(required, chunkFrames)
+    new UdbfReaderFactory(required, chunkFrames, SparkSession.active.sparkContext
+      .broadcast(new SerializableConfiguration(UdbfDataSource.sessionConf())))
   override def description(): String =
     s"udbf [columns: ${required.fieldNames.mkString(",")}]"
 }
 
-final class UdbfReaderFactory(required: StructType, chunkFrames: Int)
+final class UdbfReaderFactory(required: StructType, chunkFrames: Int,
+    conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   // decoded vectors feed ColumnarToRow / whole-stage codegen directly,
   // so Spark never asks this factory for the row reader
   override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new UdbfPartitionReader(
-      partition.asInstanceOf[UdbfInputPartition].file, required.fieldNames, chunkFrames)
+    new UdbfPartitionReader(partition.asInstanceOf[UdbfInputPartition].file,
+      required.fieldNames, chunkFrames, conf.value.value)
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new UdbfColumnarReader(
-      partition.asInstanceOf[UdbfInputPartition].file, required, chunkFrames)
+    new UdbfColumnarReader(partition.asInstanceOf[UdbfInputPartition].file,
+      required, chunkFrames, conf.value.value)
 }
 
 /** Shared decode cursor over one `.dat` file: header/offset bookkeeping,
@@ -188,10 +195,10 @@ final class UdbfReaderFactory(required: StructType, chunkFrames: Int)
   * chunk-concat gate. Only the projected channels are ever decoded;
   * other fields are skipped by byte offset. */
 private[udbf] final class UdbfCursor(
-    file: String, requiredCols: Array[String], chunkFrames: Int) {
+    file: String, requiredCols: Array[String], chunkFrames: Int, conf: Configuration) {
   import UdbfFormat._
 
-  private val bytes = UdbfDataSource.readBytes(file, new Configuration())
+  private val bytes = UdbfDataSource.readBytes(file, conf)
   val header: Header = parseHeader(bytes)
   private val buf = ByteBuffer.wrap(bytes).order(
     if (header.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
@@ -276,10 +283,10 @@ private[udbf] final class UdbfCursor(
 /** Row-path reader: one `GenericInternalRow` per frame. The parity
   * reference the vectorized reader's spec decodes against. */
 final class UdbfPartitionReader(
-    file: String, requiredCols: Array[String], chunkFrames: Int)
+    file: String, requiredCols: Array[String], chunkFrames: Int, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val cursor = new UdbfCursor(file, requiredCols, chunkFrames)
+  private val cursor = new UdbfCursor(file, requiredCols, chunkFrames, conf)
   private val projection = cursor.projection
   private var current: InternalRow = _
 
@@ -308,13 +315,13 @@ final class UdbfPartitionReader(
   * the win grows with channel count (wide files decode many columns per
   * row object saved). */
 final class UdbfColumnarReader(
-    file: String, required: StructType, chunkFrames: Int,
+    file: String, required: StructType, chunkFrames: Int, conf: Configuration,
     batchRows: Int = 4096)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-  private val cursor = new UdbfCursor(file, required.fieldNames, chunkFrames)
+  private val cursor = new UdbfCursor(file, required.fieldNames, chunkFrames, conf)
   private val projection = cursor.projection
   private val vectors: Array[OnHeapColumnVector] =
     OnHeapColumnVector.allocateColumns(batchRows, required)

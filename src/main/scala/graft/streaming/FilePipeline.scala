@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.net.URI
 import java.nio.file.{DirectoryNotEmptyException, Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -9,24 +8,23 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.sinks.KvSink
 
 /** S5 + T1/T7/T9 + K7 — the streaming file pipeline: a Structured
-  * Streaming file source over the staging directory (fed by
+  * Streaming source over the staging directory (fed by
   * [[StabilityGate]]), one file per micro-batch, per-file try/catch with
   * dead-letter, archive-on-success, and health flags — the Spark shape
   * of conv/scripts/Pipeline.py:162-214.
   *
-  *   - Source: `binaryFile` stream projected to `path` only (the binary
-  *     content column is pruned away, so listing — not reading — is the
-  *     cost), read with `recursiveFileLookup` because the gate stages
-  *     each admitted file in its own directory, `staging/<uuid>/<name>`.
-  *     `maxFilesPerTrigger=1` reproduces the single-worker backpressure
-  *     (T9, Pipeline.py:60-66).
+  *   - Source: [[StagingSource]] over the staging root and the gate's
+  *     `staging/<uuid>/<name>` admission directories, in the gate's T3
+  *     order, one file per trigger: the single-worker backpressure (T9,
+  *     Pipeline.py:60-66).
+  *   - A batch's file is the one its end offset names in the offset
+  *     log, not a row of the batch, so the control plane runs no Spark
+  *     job. A replayed batch (a crash before its commit) reads the same
+  *     file, and runs `process` only if the file is still staged.
   *   - D1: the checkpoint makes file tracking exactly-once across
-  *     restarts, and the unique admission path lets a file re-delivered
-  *     under a name already processed run again (the stream source
-  *     remembers every path it has seen), as the reference's
+  *     restarts. A file re-delivered under a processed name arrives under
+  *     a new admission path and runs again, as the reference's
   *     remove-on-success set does (Pipeline.py:205-208).
-  *   - The per-batch `collect()` is control-plane only: it returns at
-  *     most one path string, never data rows.
   *   - Each file runs the supplied `process` (a Spark batch job); an
   *     exception is logged at WARN (file, exception class and message,
   *     throwable) and dead-letters the file to `failedDir`; a failed
@@ -54,19 +52,15 @@ final class FilePipeline(
 
   private val healthKey = s"health:${name}_file_processing"
   private val healthTtl = Some(graft.core.GraftConfig.basicTtlSeconds)
-  private val filesPerTrigger = 1 // T9
 
   private val stagingRoot = Paths.get(stagingDir).toAbsolutePath.normalize
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def toLocal(uri: String): Path =
-    if (uri.startsWith("file:")) Paths.get(URI.create(uri)) else Paths.get(uri)
-
   /** Process one admitted file; returns true on success. Public so batch
     * (non-streaming) tests and catch-up runs can reuse the exact
     * dead-letter semantics. */
-  def processOne(pathUri: String): Boolean = {
-    val p = toLocal(pathUri)
+  def processOne(path: String): Boolean = {
+    val p = Paths.get(path)
     val ok = try {
       process(p.toString)
       Files.move(p, Paths.get(finishedDir).resolve(p.getFileName),
@@ -106,32 +100,20 @@ final class FilePipeline(
       catch { case _: DirectoryNotEmptyException => () } // its file is still there
   }
 
-  // control-plane collect, contractually ≤ filesPerTrigger path
-  // strings per micro-batch (the source's admission bound) — never data
-  private[streaming] def handleBatch(batch: DataFrame, batchId: Long): Unit =
-    graft.core.Bounded
-      .collect(batch.select("path"), filesPerTrigger, "FilePipeline.batch")
-      .map(_.getString(0)).sorted.foreach(processOne)
+  // a logged batch beyond the source's admission bound fails loudly
+  private[streaming] def handleBatch(batch: DataFrame, batchId: Long): Unit = {
+    val files = StagingSource.loggedFiles(Paths.get(checkpointDir), batchId)
+    if (files.size > StagingSource.FilesPerTrigger) throw new IllegalStateException(
+      s"FilePipeline.batch: batch $batchId in $checkpointDir names ${files.size} files, " +
+        s"more than ${StagingSource.FilesPerTrigger}")
+    files.filter(f => Files.exists(Paths.get(f))).foreach(processOne)
+  }
 
   def start(): StreamingQuery =
     spark.readStream
-      .format("binaryFile")
-      // binaryFile's fixed schema, required explicitly for streaming;
-      // only `path` is ever projected so content is pruned, not read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("modificationTime",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("length",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.BinaryType))))
+      .format(classOf[StagingSource].getName)
       .option("pathGlobFilter", pathGlobFilter)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", filesPerTrigger)
       .load(stagingDir)
-      .select("path")
       .writeStream
       .queryName(s"graft-pipeline-$name")
       .option("checkpointLocation", checkpointDir)

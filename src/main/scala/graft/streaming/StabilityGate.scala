@@ -27,13 +27,12 @@ import scala.util.matching.Regex
   * 8-27 (two regex groups joined by a space, mtime fallback).
   *
   * Spark has no built-in for this (SURVEY.md §7.4): the gate runs as a
-  * staging janitor that MOVES admitted files into the directory a
-  * Structured Streaming file source watches — admission order becomes
-  * arrival order for the stream. Each admitted file gets a fresh
-  * directory, `staging/<uuid>/<name>`: the stream source remembers every
-  * path it has seen, so a unique path is what lets a file re-delivered
-  * under an already-processed name be processed again, and a staged
-  * file is never overwritten before it is processed. The file name
+  * staging janitor that MOVES admitted files into the directory
+  * [[StagingSource]] watches. Each admitted file gets a fresh
+  * directory, `staging/<uuid>/<name>`: the source never offers a
+  * handed-out path again while it is staged, so a unique path keeps a
+  * re-delivered name apart from an earlier copy still staged, and a
+  * staged file is never overwritten before it is processed. The file name
   * (and so the archive name) and its mtime are unchanged. `clock` is
   * injectable so the age gate is testable without sleeping.
   */
@@ -44,16 +43,10 @@ final class StabilityGate(
     minFileAgeMs: Long = graft.core.GraftConfig.minFileAgeMs,
     clock: () => Long = () => System.currentTimeMillis) {
 
-  import StabilityGate.StatInfo
+  import StabilityGate.{StatInfo, admissionKey}
   private val seen = mutable.Map.empty[Path, StatInfo]
 
   Files.createDirectories(stagingDir)
-
-  /** P7 — filename timestamp; falls back to mtime (utility.py:20-27). */
-  private[streaming] def extractTs(p: Path): Option[Long] =
-    StabilityGate.filenameTs(p.getFileName.toString)
-      .map(_.toInstant(ZoneOffset.UTC).toEpochMilli)
-      .orElse(scala.util.Try(Files.getLastModifiedTime(p).toMillis).toOption)
 
   private def isStable(p: Path): Boolean = {
     val st = try {
@@ -88,12 +81,12 @@ final class StabilityGate(
     val listed = files.toSet
     seen.filterInPlace { case (p, _) => listed(p) }
     val candidates = files.flatMap { p =>
-      extractTs(p) match {
-        case Some(ts) if isStable(p) => Some((ts, p))
+      admissionKey(p) match {
+        case Some(key) if isStable(p) => Some((key, p))
         case _ => None
       }
     }
-    candidates.sortBy { case (ts, p) => (ts, p.toString) }.headOption.map {
+    candidates.sortBy(_._1).headOption.map {
       case (_, p) =>
         val dir = Files.createDirectory(stagingDir.resolve(UUID.randomUUID.toString))
         val dest = dir.resolve(p.getFileName)
@@ -122,6 +115,14 @@ object StabilityGate {
     TimestampRe.findFirstMatchIn(name).flatMap { m =>
       scala.util.Try(LocalDateTime.parse(s"${m.group(1)} ${m.group(2)}", TimestampFmt)).toOption
     }
+
+  /** T3 — the admission order, also [[StagingSource]]'s: P7 filename
+    * timestamp, else mtime (utility.py:20-27), then name, then path. */
+  def admissionKey(p: Path): Option[(Long, String, String)] =
+    filenameTs(p.getFileName.toString)
+      .map(_.toInstant(ZoneOffset.UTC).toEpochMilli)
+      .orElse(scala.util.Try(Files.getLastModifiedTime(p).toMillis).toOption)
+      .map(ts => (ts, p.getFileName.toString, p.toString))
 
   private[streaming] final case class StatInfo(
       size: Long, mtime: Long, var stableCount: Int)

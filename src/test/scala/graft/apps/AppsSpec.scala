@@ -152,6 +152,17 @@ class AppsSpec extends SparkSpec {
       "counts:mean" -> "7.0", "counts:min" -> "5.0", "counts:max" -> "9.0"))
   }
 
+  test("LPI: a mixed-case .Dat suffix is cut from the stem, as SENS and MIST cut theirs") {
+    val file = tempDir("stem").resolve("fhe_1hz_2024-03-15_12-00-00.Dat")
+    val stats = tempDir("stem_stats")
+    UdbfWriter.write(file, Seq(ChannelSpec("ch_a", "V")), 20, (i, _) => i.toDouble,
+      1710504000000000L, 1.0)
+    val kv = new InMemoryKvSink()
+    new LpiAnalysis(spark, stats.toString, kv).processFile(file.toString)
+    assert(kv.scan("stats:*") == Seq("stats:fhe_1hz_2024-03-15_12-00-00"))
+    assert(Files.exists(stats.resolve("fhe_1hz_2024-03-15_12-00-00_stats.csv")))
+  }
+
   test("LPI, MIST and SENS write every key with BASIC_REDIS_TTL by default") {
     val ttls = scala.collection.concurrent.TrieMap.empty[String, Option[Long]]
     val kv = new KvSink {

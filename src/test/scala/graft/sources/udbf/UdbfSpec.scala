@@ -117,6 +117,20 @@ class UdbfSpec extends SparkSpec {
     assert(UdbfDataSource.firstFrameMicros(empty.toString).isEmpty)
   }
 
+  test("a udbf read opens its file through the session's Hadoop configuration, on the driver and in the task") {
+    val f = UdbfFixtures.ensure(tmpDir)
+    val settings = Seq("fs.file.impl" -> classOf[CountingLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      CountingLocalFileSystem.opens.set(0)
+      val df = spark.read.format("udbf").load(f)
+      assert(CountingLocalFileSystem.opens.get == 1, "the driver's header read")
+      assert(df.count() == UdbfFixtures.Frames)
+      assert(CountingLocalFileSystem.opens.get == 2, "the task's decode")
+    } finally settings.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("files without a per-record time field derive ts from frame index") {
     val dir = tmpDir
     val p = Paths.get(dir, "notime.dat")
@@ -183,7 +197,7 @@ class UdbfSpec extends SparkSpec {
       .collect()
     // the row path, decoded directly by the row reader
     val reader = new UdbfPartitionReader(p.toString, colDf.columns,
-      UdbfDataSource.DefaultChunkFrames)
+      UdbfDataSource.DefaultChunkFrames, spark.sessionState.newHadoopConf())
     val rowRows = Iterator.continually(reader.next()).takeWhile(identity)
       .map(_ => reader.get().copy()).toVector
     reader.close()
@@ -215,4 +229,18 @@ class UdbfSpec extends SparkSpec {
       .option("chunkFrames", "10").load(p.toString).count()
     assert(n == 20, s"expected the gate to end the file at frame 20, read $n")
   }
+}
+
+/** The local file system, counting `open` calls: set as the session's
+  * `fs.file.impl` to see which reads go through its configuration. */
+class CountingLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    CountingLocalFileSystem.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingLocalFileSystem {
+  val opens = new java.util.concurrent.atomic.AtomicInteger
 }

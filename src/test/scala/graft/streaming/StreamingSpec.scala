@@ -383,4 +383,149 @@ class StreamingSpec extends SparkSpec {
     assert(hash("probe_2024-03-15_12-00-00_reading") == "2.5")
     assert(kv.get("health:sens_file_processing").contains("0"))
   }
+
+  /** Runs `pipeline` until staging holds nothing it has not handed out, then stops it. */
+  private def runOnce(pipeline: FilePipeline): Unit = {
+    val q = pipeline.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Stages `name` as the gate does, in an admission directory of its own. */
+  private def stageAs(staging: Path, name: String): Path = {
+    val dir = Files.createDirectory(staging.resolve(java.util.UUID.randomUUID.toString))
+    Files.write(dir.resolve(name), Array[Byte](1))
+  }
+
+  private def listed(dir: Path): List[Path] =
+    Using.resource(Files.list(dir))(_.iterator().asScala.toList)
+
+  test("the pipeline's control plane runs no Spark job; a backlog goes out in T3 order") {
+    val staging = tempDir("nojob_stage")
+    val names = Seq("z_2024-03-15_12-00-00.dat", "a_2024-03-15_12-10-00.dat",
+      "m_2024-03-15_12-20-00.dat")
+    names.reverse.foreach(stageAs(staging, _))
+    val seen = mutable.ArrayBuffer.empty[String]
+    val ckpt = tempDir("nojob_ckpt")
+    val pipeline = new FilePipeline(spark, "nojob", staging.toString,
+      tempDir("nojob_fin").toString, tempDir("nojob_fail").toString,
+      ckpt.toString, new InMemoryKvSink(),
+      process = p => seen.synchronized(seen += Paths.get(p).getFileName.toString))
+    assert(jobsRunBy(runOnce(pipeline)) == 0)
+    assert(seen == names)
+    assert(listed(staging).isEmpty)
+    // T9: one batch per file, and no batch without one
+    assert(listed(ckpt.resolve("offsets")).count(_.getFileName.toString.forall(_.isDigit)) == 3)
+  }
+
+  test("T9: a logged batch naming more files than a trigger admits fails, running none") {
+    val staging = tempDir("bound_stage"); val ckpt = tempDir("bound_ckpt")
+    val files = Seq("a_2024-03-15_12-00-00.dat", "b_2024-03-15_12-10-00.dat")
+      .map(stageAs(staging, _))
+    val pipeline = new FilePipeline(spark, "bound", staging.toString,
+      tempDir("bound_fin").toString, tempDir("bound_fail").toString, ckpt.toString,
+      new InMemoryKvSink(), process = p => fail(s"ran $p"))
+    Files.createDirectories(ckpt.resolve("offsets"))
+    Files.writeString(ckpt.resolve("offsets").resolve("0"),
+      "v1\n{}\n" + StagingSource.Handout(files.map(_.toString), Nil).json)
+    val e = intercept[IllegalStateException](pipeline.handleBatch(spark.emptyDataFrame, 0))
+    assert(e.getMessage.contains("names 2 files"), e.getMessage)
+    assert(files.forall(Files.exists(_)))
+  }
+
+  test("D1 replay: a logged batch runs its file again only while the file is still staged") {
+    val input = tempDir("replay_in"); val staging = tempDir("replay_stage")
+    val finished = tempDir("replay_fin"); val stats = tempDir("replay_stats")
+    val ckpt = tempDir("replay_ckpt")
+    val (gate, age) = gateWith(input, staging, stableChecks = 1)
+    val kv = new InMemoryKvSink()
+    val analysis = new LpiAnalysis(spark, stats.toString, kv)
+    val runs = mutable.ArrayBuffer.empty[String]
+    @volatile var crash = false
+    val pipeline = new FilePipeline(spark, "replay", staging.toString, finished.toString,
+      tempDir("replay_fail").toString, ckpt.toString, kv, process = { p =>
+        // an Error is no dead-letter cause: it ends the query mid-batch
+        if (crash) throw new AssertionError("driver lost")
+        runs.synchronized(runs += Paths.get(p).getFileName.toString)
+        analysis.processFile(p)
+      })
+    def deliver(name: String, startMicros: Long): Unit = {
+      UdbfWriter.write(input.resolve(name), Seq(ChannelSpec("ch_a", "V")), 20,
+        (i, _) => i.toDouble, startMicros, 1.0)
+      age()
+      assert(gate.pollAll().size == 1)
+    }
+    val first = "fhe_1hz_2024-03-15_12-00-00.dat"
+    deliver(first, 1710504000000000L)
+    runOnce(pipeline)
+    val csvs = listed(stats).map(p => p -> Files.getLastModifiedTime(p)).toMap
+    val hash = kv.hgetAll("stats:fhe_1hz_2024-03-15_12-00-00")
+    assert(runs == Seq(first) && csvs.size == 1 && hash.nonEmpty)
+
+    // a crash between the archive and the commit: the batch is logged
+    // and its file has left staging, so the replay runs nothing
+    val commits = ckpt.resolve("commits")
+    val last = listed(commits).map(_.getFileName.toString)
+      .filter(_.forall(_.isDigit)).map(_.toLong).max
+    Files.delete(commits.resolve(last.toString))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    runOnce(pipeline)
+    assert(runs == Seq(first))
+    assert(listed(staging).isEmpty)
+    csvs.foreach { case (p, t) => assert(Files.getLastModifiedTime(p) == t, p) }
+    assert(kv.hgetAll("stats:fhe_1hz_2024-03-15_12-00-00") == hash)
+
+    // a crash before the file is processed: the replay runs it once
+    val second = "fhe_1hz_2024-03-15_12-10-00.dat"
+    deliver(second, 1710504600000000L)
+    crash = true
+    val q = pipeline.start()
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+    finally q.stop()
+    crash = false
+    runOnce(pipeline)
+    assert(runs == Seq(first, second))
+    assert(Files.exists(finished.resolve(second)) && listed(staging).isEmpty)
+  }
+
+  test("T7: a file whose dead-letter move failed stays staged and is never offered again") {
+    val staging = tempDir("stuck_stage"); val finished = tempDir("stuck_fin")
+    val failed = tempDir("stuck_fail").resolve("failed")
+    val runs = mutable.ArrayBuffer.empty[String]
+    val pipeline = new FilePipeline(spark, "stuck", staging.toString, finished.toString,
+      failed.toString, tempDir("stuck_ckpt").toString, new InMemoryKvSink(), process = { p =>
+        runs.synchronized(runs += Paths.get(p).getFileName.toString)
+        require(!p.contains("bad"), "boom")
+      })
+    // the constructor made failedDir: a regular file in its place fails the move
+    Files.delete(failed)
+    Files.write(failed, Array[Byte](1))
+    val bad = stageAs(staging, "bad_2024-03-15_12-00-00.dat")
+    runOnce(pipeline)
+    val good = stageAs(staging, "good_2024-03-15_12-10-00.dat")
+    runOnce(pipeline)
+    runOnce(pipeline)
+    assert(runs == Seq("bad_2024-03-15_12-00-00.dat", "good_2024-03-15_12-10-00.dat"))
+    assert(Files.exists(bad) && !Files.exists(good))
+    assert(Files.exists(finished.resolve(good.getFileName)))
+  }
+
+  test("D1: a checkpoint with offsets this pipeline's source did not write fails, naming it") {
+    val staging = tempDir("old_stage"); val ckpt = tempDir("old_ckpt")
+    Files.write(staging.resolve("a_2024-03-15_12-00-00.dat"), Array[Byte](1))
+    // a binaryFile stream's checkpoint: its offsets are {"logOffset":n}
+    val old = spark.readStream.format("binaryFile")
+      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
+      .load(staging.toString).select("path")
+      .writeStream.option("checkpointLocation", ckpt.toString)
+      .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) => ()).start()
+    try old.processAllAvailable() finally old.stop()
+    val pipeline = new FilePipeline(spark, "old", staging.toString,
+      tempDir("old_fin").toString, tempDir("old_fail").toString, ckpt.toString,
+      new InMemoryKvSink(), process = p => fail(s"ran $p"))
+    val q = pipeline.start()
+    val e = try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.processAllAvailable()) finally q.stop()
+    assert(e.getMessage.contains(s"checkpoint file:$ckpt"), e.getMessage)
+    assert(e.getMessage.contains("logOffset"), e.getMessage)
+  }
 }
